@@ -3110,8 +3110,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     The dict below is declared in narrative (family) order; the returned
     dict is that registry rotated by :func:`_coverage_rotate` so the round
     driver's bounded 50-row oracle prefix always lands on the queries with
-    the stalest (or no) driver-verified row, flagship first. With 188
-    entries no 50-row prefix can cover everything, so the COMPLETE gate is
+    the stalest (or no) driver-verified row, flagship first. With the
+    registry far larger than 50 entries no prefix can cover everything, so the COMPLETE gate is
     tests/test_oracle_parity.py (every entry vs its DuckDB oracle at
     sf0.001, run by plain pytest) plus the committed sf0.01 full-registry
     sweep record (BENCH/SELFCHECK_r05.md).
@@ -3458,7 +3458,8 @@ def _url_aligned_pairs_oracle() -> str:
     """Mirror of _q_url_aligned_pairs: identical synthetic URL build,
     the module's own URL_LANG_SEG_RE / URL_LANG_QUERY_RE patterns (RE2
     replacement syntax), min-url election per (key, lang), cross-lang
-    self-join with lang_a < lang_b."""
+    self-join with lang_a < lang_b. Both replacements are global ('g'), as
+    Spark's regexp_replace is."""
     from readability_spark.operators.urltools import (
         URL_LANG_QUERY_RE,
         URL_LANG_SEG_RE,
@@ -3481,8 +3482,8 @@ WITH pages AS (
   SELECT {url} AS url, lang FROM documents),
 keyed AS (
   SELECT regexp_replace(
-           regexp_replace(url, '{URL_LANG_SEG_RE}', '/*/'),
-           '{URL_LANG_QUERY_RE}', '\\1lang=*\\2') AS url_key,
+           regexp_replace(url, '{URL_LANG_SEG_RE}', '/*/', 'g'),
+           '{URL_LANG_QUERY_RE}', '\\1lang=*\\2', 'g') AS url_key,
          lang, url
   FROM pages),
 elected AS (
@@ -3499,23 +3500,34 @@ def _jsonl_shards_oracle() -> str:
     + newline, fixed key order, no whitespace) with string concatenation
     and sums its byte length per md5-assigned shard — independent of every
     piece of the Python sink. Exact because the synthetic corpus text is
-    JSON-neutral ASCII (no escapes); the operator itself escapes
-    arbitrary text (pinned in tests/test_jsonl.py)."""
+    JSON-neutral ASCII (no escapes); the guard CTE makes the oracle fail
+    loudly, instead of mis-counting, on a corpus where that does not hold.
+    The operator itself escapes arbitrary text (pinned in
+    tests/test_jsonl.py)."""
     h32 = _h32_sql(tok="doc_id::varchar")
     line = (
         "'{\"doc_id\":' || doc_id::varchar || ',\"lang\":\"' || coalesce(lang, '') "
         "|| '\",\"source\":\"' || coalesce(source, '') || '\",\"text\":\"' "
         "|| coalesce(text, '') || '\"}'"
     )
+    # printable ASCII without '"' or '\\': JSON-encodes to itself
+    neutral = "regexp_full_match(coalesce({col}, ''), '[ !#-\\[\\]-~]*')"
+    escape_free = " AND ".join(neutral.format(col=c) for c in ("text", "lang", "source"))
     return f"""
-WITH assigned AS (
+WITH guard AS (
+  SELECT count(*) FILTER (WHERE NOT ({escape_free})) AS n_bad FROM documents),
+assigned AS (
   SELECT ({h32}) % 16 AS shard_id,
          octet_length(encode({line})) + 1 AS line_bytes
   FROM documents)
 SELECT shard_id::int AS shard_id,
        count(*)::bigint AS n_docs,
        sum(line_bytes)::bigint AS payload_bytes
-FROM assigned GROUP BY shard_id
+FROM assigned
+WHERE (SELECT CASE WHEN n_bad = 0 THEN true
+              ELSE error('jsonl_shards oracle: corpus text needs JSON escapes') END
+       FROM guard)
+GROUP BY shard_id
 """
 
 

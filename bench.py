@@ -277,7 +277,7 @@ def main() -> int:
         "webdataset_shards",
         "webdataset_roundtrip",
         # r5: the 33 queries the tail had never timed — with these the
-        # bench covers the full 185-query registry (1 trial each; walls
+        # bench covers the full registry (1 trial each; walls
         # to TRIALS.json like the rest of the tail)
         "dedup_simhash64",
         "dedup_embedding_cosine",

@@ -32,7 +32,7 @@ from typing import Optional
 from readability_spark.core import text as T
 from readability_spark.core.css import iter_declarations
 from readability_spark.core.urls import DocumentUrl, is_base64_data_url
-from readability_spark.dom.node import Comment, Document, Element, Node, Text
+from readability_spark.dom.node import Comment, Document, Element, Node, Text, invalidate
 from readability_spark.dom.parser import parse_html
 from readability_spark.dom.serializer import inner_html
 
@@ -145,6 +145,196 @@ def _clone_node(node: Node) -> Node:
     if isinstance(node, Text):
         return Text(node.data)
     return Comment(node.data)  # type: ignore[union-attr]
+
+
+# --------------------------------------------------------------------------
+# Subtree summaries
+# --------------------------------------------------------------------------
+#
+# The cleanup and scoring predicates ask the same questions of every node of
+# a nested structure: how long is its normalised text, how many <p>/<img>/
+# <li>/<input> lie below it, how long is the text of its lists, headings and
+# "textish" descendants, which anchors and embeds it holds. Answering each by
+# a subtree walk costs O(depth^2) on nested pages. The summary answers them
+# all from one bottom-up pass: each element's summary is built from its
+# children's, memoised on the element (``Element._sum``) and dropped when its
+# subtree changes (``dom.node.invalidate``).
+#
+# A summary is a tuple (packed, n, lead, trail, red, anchors, embeds):
+# - ``packed``: integer counters and text-length sums, one 64-bit lane each
+#   (``_L_*``), added lane-wise by plain integer addition; ``_L_COMMAS``
+#   counts ASCII commas (``_getCharCount``), ``_L_ANY_COMMAS`` the nine
+#   comma variants paragraph scoring splits on;
+# - (n, lead, trail, red): the text_content length, its leading and trailing
+#   JS-whitespace run lengths (lead == n for all-whitespace text) and the
+#   characters that collapsing internal runs of >= 2 whitespace characters
+#   removes — enough to compose ``len(inner_text)`` exactly from parts;
+# - ``anchors`` / ``embeds``: descendant <a> and <object>/<embed>/<iframe>
+#   elements in document order; their attributes (hash links, the video
+#   allowlist) are read at query time.
+
+_LANE = 64
+(
+    _L_COMMAS, _L_ANY_COMMAS, _L_P, _L_IMG, _L_LI, _L_INPUT, _L_BR, _L_HR,
+    _L_CAPTION, _L_TABLEISH, _L_TABLE, _L_DATA_TABLE, _L_LIST_LEN,
+    _L_HEADING_LEN, _L_TEXTISH_LEN,
+) = range(15)
+_LANE_MASK = (1 << _LANE) - 1
+
+TEXTISH_TAGS = frozenset(("span", "li", "td")) | DIV_TO_P_ELEMS
+_HEADINGS = ("h1", "h2", "h3", "h4", "h5", "h6")
+_EMBEDS = ("object", "embed", "iframe")
+
+
+def _build_tag_lanes() -> dict:
+    """tag -> (counter increment, text-length multiplier) in packed lanes."""
+    counts = {
+        "p": _L_P, "img": _L_IMG, "li": _L_LI, "input": _L_INPUT, "br": _L_BR,
+        "hr": _L_HR, "caption": _L_CAPTION, "table": _L_TABLE,
+        "col": _L_TABLEISH, "colgroup": _L_TABLEISH, "tfoot": _L_TABLEISH,
+        "thead": _L_TABLEISH, "th": _L_TABLEISH,
+    }
+    lengths: dict = {}
+    for tag in TEXTISH_TAGS:
+        lengths.setdefault(tag, []).append(_L_TEXTISH_LEN)
+    for tag in ("ul", "ol"):
+        lengths.setdefault(tag, []).append(_L_LIST_LEN)
+    for tag in _HEADINGS:
+        lengths.setdefault(tag, []).append(_L_HEADING_LEN)
+    out = {}
+    for tag in counts.keys() | lengths.keys():
+        inc = 1 << (_LANE * counts[tag]) if tag in counts else 0
+        mul = sum(1 << (_LANE * lane) for lane in lengths.get(tag, ()))
+        out[tag] = (inc, mul)
+    return out
+
+
+_TAG_LANES = _build_tag_lanes()
+_DATA_TABLE_INC = 1 << (_LANE * _L_DATA_TABLE)
+_ANY_COMMA_SHIFT = _LANE * _L_ANY_COMMAS
+_COMMAS_RE = T.COMMAS_RE
+_JS_WS = T.JS_WS_CHARS
+_WS_RUN2 = T._WS_RUN2
+
+
+def _lane(packed: int, lane: int) -> int:
+    return (packed >> (_LANE * lane)) & _LANE_MASK
+
+
+def _norm_len(s: tuple) -> int:
+    """len(inner_text(el)) from el's summary."""
+    n, lead = s[1], s[2]
+    return 0 if lead == n else n - lead - s[3] - s[4]
+
+
+def _summary(root: Element) -> tuple:
+    """The memoised subtree summary of ``root`` (see above); computes the
+    stale part of the subtree bottom-up, iteratively (depth-safe)."""
+    s = root._sum
+    if s is not None:
+        return s
+    lanes = _TAG_LANES
+    ws = _JS_WS
+    run2 = _WS_RUN2
+    any_shift = _ANY_COMMA_SHIFT
+    stack = [root]
+    while stack:
+        el = stack[-1]
+        pending = False
+        for c in el.children:
+            if c.is_element and c._sum is None:
+                stack.append(c)
+                pending = True
+        if pending:
+            continue
+        stack.pop()
+        if el._sum is not None:  # reached twice through the stack
+            continue
+        packed = n = lead = trail = red = 0
+        anchors: list = []
+        embeds: list = []
+        for c in el.children:
+            if c.is_element:
+                cs = c._sum
+                cn, cl, ct, cr = cs[1], cs[2], cs[3], cs[4]
+                packed += cs[0]
+                tag = c.tag
+                lane = lanes.get(tag)
+                if lane is not None:
+                    packed += lane[0]
+                    if lane[1]:
+                        packed += lane[1] * (0 if cl == cn else cn - cl - ct - cr)
+                    if tag == "table" and c._flags & 2:
+                        packed += _DATA_TABLE_INC
+                if tag == "a":
+                    anchors.append(c)
+                if cs[5]:
+                    anchors.extend(cs[5])
+                if tag in _EMBEDS:
+                    embeds.append(c)
+                if cs[6]:
+                    embeds.extend(cs[6])
+            elif c.is_text:
+                d = c.data
+                cn = len(d)
+                if not cn:
+                    continue
+                commas = d.count(",")
+                packed += commas + (
+                    (commas if d.isascii() else len(_COMMAS_RE.findall(d))) << any_shift
+                )
+                core = d.strip(ws)
+                if not core:
+                    cl = ct = cn
+                    cr = 0
+                else:
+                    cl = cn - len(d.lstrip(ws))
+                    ct = cn - len(d.rstrip(ws))
+                    cr = len(core) - len(run2.sub(" ", core))
+            else:
+                continue
+            if not cn:
+                continue
+            # append the child's text to the accumulated text
+            if lead == n:  # accumulated text is all whitespace (or empty)
+                if cl == cn:
+                    n += cn
+                    lead = trail = n
+                else:
+                    lead = n + cl
+                    trail = ct
+                    red = cr
+                    n += cn
+            elif cl == cn:
+                trail += cn
+                n += cn
+            else:
+                junction = trail + cl
+                red += cr + (junction - 1 if junction > 1 else 0)
+                trail = ct
+                n += cn
+        el._sum = (packed, n, lead, trail, red, anchors or (), embeds or ())
+        el._fresh = True
+    return root._sum
+
+
+def _in_data_table(el: Optional[Element], memo: dict) -> bool:
+    """True iff ``el`` or an ancestor is a table marked as a data table;
+    memoised along the path, so a loop over a nested structure stays
+    linear."""
+    chain = []
+    found = False
+    while el is not None:
+        known = memo.get(el)
+        if known is not None:
+            found = known
+            break
+        chain.append(el)
+        el = el.parent
+    for a in reversed(chain):
+        found = found or (a.tag == "table" and a.data_table)
+        memo[a] = found
+    return found
 
 
 def _first_truthy(*values):
@@ -262,6 +452,11 @@ class Readability:
         self._doc_url = DocumentUrl.from_document(doc, doc.base_uri)
         # raw source (decoded) for cheap pristine-body restoration on retries
         self._source_html: Optional[str] = None
+        # one-walk document snapshot of the prep and metadata phase (see
+        # _doc_elements)
+        self._snapshot: Optional[list] = None
+        self._snapshot_body: tuple = (None, 0, 0)
+        self._snapshot_dirty: set = set()
 
     # ---------------------------------------------------------------- flags
     def _flag_is_active(self, flag: int) -> bool:
@@ -345,6 +540,84 @@ class Readability:
             node = node.parent
         return ancestors
 
+    # ------------------------------------------------------ document snapshot
+    # The prep and metadata passes take about ten whole-document tag
+    # snapshots (document.getElementsByTagName). They come from one walk:
+    # the first request records every element with a tag below, in document
+    # order, and each request filters that list by current tag. A pass of
+    # this phase removes or inserts subtrees only through _detach and
+    # _inserted, which record the tags whose membership may have changed
+    # below the subtree's root (a removed root itself is recognised by its
+    # cleared parent); a request for such a tag walks the document afresh.
+    # parse() ends the snapshot after the metadata pass, before the passes
+    # that mutate freely.
+    _SNAPSHOT_TAGS = frozenset("img noscript script style br font meta title h1 h2".split())
+
+    def _take_snapshot(self) -> list:
+        want = self._SNAPSHOT_TAGS
+        body = self._doc.body
+        body_start = body_end = 0
+        body_level = -1
+        out: list = []
+        stack: list = []
+        children = self._doc.children
+        i, n = 0, len(children)
+        while True:
+            while i < n:
+                node = children[i]
+                i += 1
+                if node.is_element:
+                    if node.tag in want:
+                        out.append(node)
+                    if node is body:
+                        body_start = body_end = len(out)
+                    if node.children:
+                        stack.append((children, i, n))
+                        if node is body:
+                            body_level = len(stack)
+                        children = node.children
+                        i, n = 0, len(children)
+            if len(stack) == body_level:
+                body_end = len(out)
+                body_level = -1
+            if not stack:
+                break
+            children, i, n = stack.pop()
+        self._snapshot_body = (body, body_start, body_end)
+        self._snapshot_dirty = set()
+        return out
+
+    def _doc_elements(self, *tags: str, within: Optional[Element] = None) -> list:
+        """``(within or document).get_elements_by_tag_name(*tags)`` in the
+        prep and metadata phase; ``within`` may only be the body."""
+        snap = self._snapshot
+        if snap is None:
+            snap = self._snapshot = self._take_snapshot()
+        if not self._snapshot_dirty.isdisjoint(tags) or not self._SNAPSHOT_TAGS.issuperset(tags):
+            return (within or self._doc).get_elements_by_tag_name(*tags)
+        if within is not None:
+            body, start, end = self._snapshot_body
+            if within is not body or self._doc.body is not body:
+                return within.get_elements_by_tag_name(*tags)
+            snap = snap[start:end]
+        return [e for e in snap if e.tag in tags and e.parent is not None]
+
+    def _removing(self, node: Node) -> None:
+        """Record a subtree the prep phase is about to take out of the
+        document."""
+        if self._snapshot is not None and node.is_element and node.children:
+            self._snapshot_dirty.update(e.tag for e in node.iter_elements())
+
+    def _detach(self, node: Node) -> None:
+        """node.remove() in the prep phase, keeping the snapshot exact."""
+        self._removing(node)
+        node.remove()
+
+    def _inserted(self, node: Node) -> None:
+        """Record a subtree the prep phase inserted into the document."""
+        if self._snapshot is not None and node.is_element:
+            self._snapshot_dirty.update(e.tag for e in node.iter_elements(include_self=True))
+
     # ------------------------------------------------------------- predicates
     def _is_phrasing_content(self, node: Node) -> bool:
         if isinstance(node, Text):
@@ -388,14 +661,19 @@ class Readability:
 
     @staticmethod
     def _is_element_without_content(el: Element) -> bool:
-        if el.has_text_content(T.JS_WS_CHARS):
+        s = el._sum
+        if s is None:
+            # the early-exit walk first: most elements have text near the
+            # top, and only text-free ones need the br/hr counts
+            if el.has_text_content(T.JS_WS_CHARS):
+                return False
+            s = _summary(el)
+        elif s[2] != s[1]:  # not all whitespace
             return False
         kids = el.element_children()
         if not kids:
             return True
-        return len(kids) == len(el.get_elements_by_tag_name("br")) + len(
-            el.get_elements_by_tag_name("hr")
-        )
+        return len(kids) == _lane(s[0], _L_BR) + _lane(s[0], _L_HR)
 
     def _has_child_block_element(self, el: Element) -> bool:
         # any descendant element with a block tag (iterative — depth-safe)
@@ -430,20 +708,20 @@ class Readability:
 
     # ---------------------------------------------------------------- metrics
     def _get_link_density(self, el: Element) -> float:
-        # Anchor snapshot first: with no <a> descendants the density is 0
-        # regardless of text length (0/n == 0, and the n==0 branch also
-        # returns 0) — skips the subtree text walk for link-free nodes.
-        anchors = el.get_elements_by_tag_name("a")
+        s = _summary(el)
+        anchors = s[5]
         if not anchors:
             return 0.0
-        text_length = len(T.inner_text(el))
+        text_length = _norm_len(s)
         if text_length == 0:
             return 0.0
+        # summed per anchor in document order, as the reference does, so the
+        # float result is the same bit for bit
         link_length = 0.0
         for a in anchors:
             href = a.get_attr("href")
             coeff = 0.3 if (href and RX_HASH_URL.match(href)) else 1.0
-            link_length += len(T.inner_text(a)) * coeff
+            link_length += _norm_len(a._sum) * coeff
         return link_length / text_length
 
     def _get_class_weight(self, el: Element) -> int:
@@ -455,23 +733,6 @@ class Readability:
         if el.id:
             weight += _negpos_weight(el.id)
         return weight
-
-    def _get_char_count(self, el: Element, sep: str = ",") -> int:
-        return len(T.inner_text(el).split(sep)) - 1
-
-    def _get_text_density(self, el: Element, tags) -> float:
-        return self._text_density_over(el, el.get_elements_by_tag_name(*tags))
-
-    @staticmethod
-    def _text_density_over(el: Element, elements) -> float:
-        """Text density against a pre-collected descendant snapshot (same
-        math as :meth:`_get_text_density`; the list must be in document
-        order, as a ``get_elements_by_tag_name`` walk yields it)."""
-        text_length = len(T.inner_text(el, True))
-        if text_length == 0:
-            return 0.0
-        children_length = sum(len(T.inner_text(c, True)) for c in elements)
-        return children_length / text_length
 
     def _initialize_node(self, el: Element) -> None:
         el.readability = {"contentScore": 0.0}
@@ -490,7 +751,7 @@ class Readability:
     def _doc_title_string(self) -> str:
         """document.title: child text of the first <title>, ASCII-whitespace
         stripped and collapsed (DOM spec; JSDOM follows it)."""
-        for el in self._doc.get_elements_by_tag_name("title"):
+        for el in self._doc_elements("title"):
             return re.sub(r"[\t\n\f\r ]+", " ", el.text_content).strip("\t\n\f\r ")
         return ""
 
@@ -506,7 +767,7 @@ class Readability:
             if wc(cur_title) < 3:
                 cur_title = re.sub(r"[^\|\-\\/>»]*[\|\-\\/>»](.*)", r"\1", orig_title)
         elif ": " in cur_title:
-            headings = self._doc.get_elements_by_tag_name("h1", "h2")
+            headings = self._doc_elements("h1", "h2")
             trimmed = T.js_trim(cur_title)
             match = any(T.js_trim(h.text_content) == trimmed for h in headings)
             if not match:
@@ -516,7 +777,7 @@ class Readability:
                 elif wc(orig_title[: orig_title.find(":")]) > 5:
                     cur_title = orig_title
         elif len(cur_title) > 150 or len(cur_title) < 15:
-            h_ones = self._doc.get_elements_by_tag_name("h1")
+            h_ones = self._doc_elements("h1")
             if len(h_ones) == 1:
                 cur_title = T.inner_text(h_ones[0])
 
@@ -531,17 +792,17 @@ class Readability:
 
     # ----------------------------------------------------------- doc prep
     def _prep_document(self) -> None:
-        for style in self._doc.get_elements_by_tag_name("style"):
+        for style in self._doc_elements("style"):
             if style.parent is not None:
-                style.remove()
+                self._detach(style)
         body = self._doc.body
         if body is not None:
             self._replace_brs(body)
-        for font in self._doc.get_elements_by_tag_name("font"):
+        for font in self._doc_elements("font"):
             font.set_tag("span")
 
     def _replace_brs(self, elem: Element) -> None:
-        for br in elem.get_elements_by_tag_name("br"):
+        for br in self._doc_elements("br", within=elem):
             if br.parent is None:
                 continue
             nxt = br.next_sibling
@@ -553,11 +814,12 @@ class Readability:
                     break
                 replaced = True
                 br_sibling = nxt.next_sibling
-                nxt.remove()
+                self._detach(nxt)
                 nxt = br_sibling
             if not replaced:
                 continue
             p = Element("p")
+            self._removing(br)
             br.replace_with(p)
             nxt = p.next_sibling
             while nxt is not None:
@@ -571,7 +833,7 @@ class Readability:
                 p.append_child(nxt)
                 nxt = sibling
             while p.children and self._is_whitespace(p.children[-1]):
-                p.children[-1].remove()
+                self._detach(p.children[-1])
             if p.parent is not None and p.parent.tag == "p":
                 p.parent.set_tag("div")
 
@@ -587,7 +849,7 @@ class Readability:
         return False
 
     def _unwrap_noscript_images(self) -> None:
-        for img in self._doc.get_elements_by_tag_name("img"):
+        for img in self._doc_elements("img"):
             keep = False
             for name, value in img.attrs.items():
                 if name in ("src", "srcset", "data-src", "data-srcset"):
@@ -597,9 +859,9 @@ class Readability:
                     keep = True
                     break
             if not keep:
-                img.remove()
+                self._detach(img)
 
-        for noscript in self._doc.get_elements_by_tag_name("noscript"):
+        for noscript in self._doc_elements("noscript"):
             if not self._is_single_image(noscript):
                 continue
             tmp = Element("div")
@@ -629,17 +891,19 @@ class Readability:
                         new_img.set_attr(attr_name, value)
                 first = tmp.first_element_child
                 if first is not None:
+                    self._removing(prev)
                     prev.replace_with(first)
+                    self._inserted(first)
 
     def _remove_scripts(self) -> None:
-        for el in self._doc.get_elements_by_tag_name("script", "noscript"):
+        for el in self._doc_elements("script", "noscript"):
             if el.parent is not None:
-                el.remove()
+                self._detach(el)
 
     # ------------------------------------------------------------- JSON-LD
     def _get_jsonld(self) -> dict:
         metadata: Optional[dict] = None
-        for script in self._doc.get_elements_by_tag_name("script"):
+        for script in self._doc_elements("script"):
             if metadata is not None:
                 break
             if script.get_attr("type") != "application/ld+json":
@@ -719,7 +983,7 @@ class Readability:
 
     def _get_article_metadata(self, jsonld: dict) -> dict:
         values: dict = {}
-        for el in self._doc.get_elements_by_tag_name("meta"):
+        for el in self._doc_elements("meta"):
             element_name = el.get_attr("name")
             element_property = el.get_attr("property")
             content = el.get_attr("content")
@@ -923,15 +1187,17 @@ class Readability:
                 parent = element.parent
                 if parent is None or not isinstance(parent, Element) or parent.tag == "#document":
                     continue
-                inner = T.inner_text(element)
-                if len(inner) < 25:
+                es = _summary(element)
+                inner_length = _norm_len(es)  # len(inner_text(element))
+                if inner_length < 25:
                     continue
                 ancestors = self._get_ancestors(element, 5)
                 if not ancestors:
                     continue
                 content_score = 1.0
-                content_score += T.comma_split_count(inner)
-                content_score += min(len(inner) // 100, 3)
+                # comma_split_count(inner_text(element))
+                content_score += _lane(es[0], _L_ANY_COMMAS) + 1
+                content_score += min(inner_length // 100, 3)
                 for level, ancestor in enumerate(ancestors):
                     # skip ancestors without a tag name or whose parent has
                     # none (the document node and <html> in practice)
@@ -1203,11 +1469,13 @@ class Readability:
             node = stack.pop()
             if node.tag == "svg":
                 continue
-            for attr in PRESENTATIONAL_ATTRIBUTES:
-                node.remove_attr(attr)
+            attrs = node.attrs
+            if attrs and not attrs.keys().isdisjoint(PRESENTATIONAL_ATTRIBUTES):
+                for attr in PRESENTATIONAL_ATTRIBUTES:
+                    attrs.pop(attr, None)
             if node.tag in DEPRECATED_SIZE_ATTRIBUTE_ELEMS:
-                node.remove_attr("width")
-                node.remove_attr("height")
+                attrs.pop("width", None)
+                attrs.pop("height", None)
             for c in node.children:
                 if c.is_element:
                     stack.append(c)
@@ -1223,17 +1491,16 @@ class Readability:
             if table.get_attr("summary"):
                 table.set_data_table(True)
                 continue
-            captions = table.get_elements_by_tag_name("caption")
-            if captions and captions[0].children:
+            packed = _summary(table)[0]
+            if _lane(packed, _L_CAPTION):
+                caption = next(e for e in table.iter_elements() if e.tag == "caption")
+                if caption.children:
+                    table.set_data_table(True)
+                    continue
+            if _lane(packed, _L_TABLEISH):  # col, colgroup, tfoot, thead, th
                 table.set_data_table(True)
                 continue
-            if any(
-                table.get_elements_by_tag_name(tag)
-                for tag in ("col", "colgroup", "tfoot", "thead", "th")
-            ):
-                table.set_data_table(True)
-                continue
-            if table.get_elements_by_tag_name("table"):
+            if _lane(packed, _L_TABLE):
                 table.set_data_table(False)
                 continue
             rows, columns = self._get_row_and_column_count(table)
@@ -1340,92 +1607,54 @@ class Readability:
     def _clean_conditionally(self, el: Element, tag: str) -> None:
         if not self._flag_is_active(FLAG_CLEAN_CONDITIONALLY):
             return
+        # element -> "it or an ancestor is a data table"; the removals below
+        # never detach a node from a data-table ancestor (a node under one
+        # is kept), so entries stay true for the whole loop
+        in_data_table: dict = {}
         for node in reversed(el.get_elements_by_tag_name(tag)):
             if node.parent is None:
                 continue
-            if self._should_remove_conditionally(node, tag):
+            if self._should_remove_conditionally(
+                node, tag, _in_data_table(node.parent, in_data_table)
+            ):
                 node.remove()
 
-    @staticmethod
-    def _collect_removal_elements(node: Element):
-        """ONE pre-order walk collecting every subtree snapshot the
-        conditional-removal branch consumes — identical element sets, in
-        document order, to eight separate ``get_elements_by_tag_name``
-        walks (the hot path of ``_clean_conditionally``: profiled at 16k+
-        snapshot walks per corpus before fusing)."""
-        lists: list = []
-        tables: list = []
-        embeds: list = []
-        headings: list = []
-        n_p = n_img = n_li = n_input = 0
-        stack: list = []
-        children = node.children
-        i, n = 0, len(children)
-        while True:
-            while i < n:
-                c = children[i]
-                i += 1
-                if c.is_element:
-                    t = c.tag
-                    if t == "p":
-                        n_p += 1
-                    elif t == "img":
-                        n_img += 1
-                    elif t == "li":
-                        n_li += 1
-                    elif t == "input":
-                        n_input += 1
-                    elif t in ("ul", "ol"):
-                        lists.append(c)
-                    elif t == "table":
-                        tables.append(c)
-                    elif t in ("object", "embed", "iframe"):
-                        embeds.append(c)
-                    elif t in ("h1", "h2", "h3", "h4", "h5", "h6"):
-                        headings.append(c)
-                    if c.children:
-                        stack.append((children, i, n))
-                        children = c.children
-                        i, n = 0, len(children)
-            if not stack:
-                return lists, tables, embeds, headings, n_p, n_img, n_li, n_input
-            children, i, n = stack.pop()
-
-    def _should_remove_conditionally(self, node: Element, tag: str) -> bool:
-        lists, tables, embeds, headings, n_p, n_img, n_li, n_input = (
-            self._collect_removal_elements(node)
-        )
+    def _should_remove_conditionally(
+        self, node: Element, tag: str, under_data_table: bool
+    ) -> bool:
+        s = _summary(node)
+        packed = s[0]
+        content_length = _norm_len(s)  # len(inner_text(node))
 
         is_list = tag in ("ul", "ol")
         if not is_list:
-            list_length = 0
-            for lst in lists:
-                list_length += len(T.inner_text(lst))
-            total = len(T.inner_text(node))
-            is_list = total > 0 and list_length / total > 0.9
+            list_length = _lane(packed, _L_LIST_LEN)
+            is_list = content_length > 0 and list_length / content_length > 0.9
 
         if tag == "table" and node.data_table:
             return False
-        if node.has_ancestor_tag("table", -1, lambda t: t.data_table):
+        if under_data_table:
             return False
         if node.has_ancestor_tag("code"):
             return False
-        if any(t.data_table for t in tables):
+        if _lane(packed, _L_DATA_TABLE):
             return False
 
         weight = self._get_class_weight(node)
         if weight < 0:
             return True
 
-        if self._get_char_count(node, ",") < 10:
-            p = n_p
-            img = n_img
-            li = n_li - 100
-            inputs = n_input
-            heading_density = self._text_density_over(node, headings)
+        if _lane(packed, _L_COMMAS) < 10:
+            p = _lane(packed, _L_P)
+            img = _lane(packed, _L_IMG)
+            li = _lane(packed, _L_LI) - 100
+            inputs = _lane(packed, _L_INPUT)
+            heading_density = (
+                _lane(packed, _L_HEADING_LEN) / content_length if content_length else 0.0
+            )
 
             embed_count = 0
-            for embed in embeds:
+            for embed in s[6]:
                 if any(
                     self._allowed_video_regex.search(v) for v in embed.attrs.values()
                 ):
@@ -1433,14 +1662,16 @@ class Readability:
                 # (object innerHTML check dead in reference; skipped)
                 embed_count += 1
 
-            inner = T.inner_text(node)
-            if RX_AD_WORDS.search(inner) or RX_LOADING_WORDS.search(inner):
-                return True
+            # both patterns match whole words of at most 13 characters
+            if 0 < content_length <= 20:
+                inner = T.inner_text(node)
+                if RX_AD_WORDS.search(inner) or RX_LOADING_WORDS.search(inner):
+                    return True
 
-            content_length = len(inner)
             link_density = self._get_link_density(node)
-            textish_tags = ("span", "li", "td") + tuple(DIV_TO_P_ELEMS)
-            text_density = self._get_text_density(node, textish_tags)
+            text_density = (
+                _lane(packed, _L_TEXTISH_LEN) / content_length if content_length else 0.0
+            )
             is_figure_child = node.has_ancestor_tag("figure")
 
             have_to_remove = (
@@ -1469,8 +1700,7 @@ class Readability:
                 for child in node.element_children():
                     if len(child.element_children()) > 1:
                         return have_to_remove
-                li_count = len(node.get_elements_by_tag_name("li"))
-                if img == li_count:
+                if img == _lane(packed, _L_LI):
                     return False
             return have_to_remove
         return False
@@ -1576,6 +1806,7 @@ class Readability:
         self._prep_document()
 
         metadata = self._get_article_metadata(jsonld)
+        self._snapshot = None  # the passes below mutate without recording
         self._metadata = metadata
         self._article_title = metadata["title"]
 

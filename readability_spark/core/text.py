@@ -17,8 +17,6 @@ from __future__ import annotations
 
 import re
 
-from readability_spark.dom.node import _EPOCH
-
 # JavaScript WhiteSpace ∪ LineTerminator (what JS \s and String.trim use).
 JS_WS_CHARS = (
     "\t\n\x0b\x0c\r   "
@@ -60,19 +58,18 @@ def inner_text(el, normalize: bool = True) -> str:
     """JS _getInnerText (Readability.js:2028-2037): textContent.trim(),
     then collapse runs of >= 2 whitespace chars when normalizing.
 
-    The normalized form is cached per element against the DOM mutation
-    epoch (same scheme as Element.text_content): the scoring passes call
-    this repeatedly on overlapping ancestor chains, and the whitespace
-    regex re-scan was a top-3 self-time cost in the extraction profile."""
+    The normalized form is cached per element until its subtree changes
+    (same scheme as Element.text_content): the scoring passes call this
+    repeatedly on overlapping ancestor chains, and the whitespace regex
+    re-scan was a top-3 self-time cost in the extraction profile."""
     if not normalize:
         return js_trim(el.text_content)
-    ep = _EPOCH[0]
     cached = getattr(el, "_itn", None)
-    if cached is not None and cached[0] == ep:
-        return cached[1]
+    if cached is not None:
+        return cached
     text = _WS_RUN2.sub(" ", js_trim(el.text_content))
     try:
-        el._itn = (ep, text)
+        el._itn = text
     except AttributeError:
         pass
     return text

@@ -12,6 +12,17 @@ Design notes
 - Attribute values are entity-decoded strings (the parser decodes them).
 - ``Element.tag`` is mutable: ``set_tag`` covers the reference's
   ``_setNodeTag`` (keep attrs + children, swap name) without reallocating.
+- Every node keeps a hint of its position in its parent's ``children``
+  (``_pos``). A sibling step checks the hint by identity and falls back to
+  ``children.index``, so walking a run of siblings is O(1) a step even after
+  the run is edited.
+- Cached subtree values (``Element._tc`` text, ``_itn`` normalised text,
+  ``_sum`` the extraction core's subtree summary) are valid while the element
+  is *fresh*. A node is marked fresh only by a computation that covered its
+  whole subtree, so a fresh node has fresh descendants. A mutation clears
+  the caches along the mutated parent's ancestor path and stops at the first
+  ancestor that is already stale: each mutation costs O(1) amortised, and a
+  cache is dropped only when its own subtree changed.
 """
 
 from __future__ import annotations
@@ -21,17 +32,19 @@ from typing import Callable, Iterable, Iterator, Optional
 
 _WS_RE = re.compile(r"\s+")
 
-# Global tree-mutation epoch: every structural mutation bumps it, and
-# Element.text_content caches (epoch, text). Invalidation is deliberately
-# coarse (any mutation anywhere invalidates every cache) — the win is the
-# read-heavy scoring phases, where link-density/char-count/content-length
-# queries re-walk overlapping ancestor subtrees hundreds of times per
-# document with no mutations in between.
-_EPOCH = [0]
+
+def invalidate(el: "Optional[Element]") -> None:
+    """Drop the cached subtree values of ``el`` and its ancestors, after a
+    change to ``el``'s subtree. Stops at the first stale ancestor: every
+    ancestor of a stale node is stale."""
+    while el is not None and el._fresh:
+        el._fresh = False
+        el._tc = el._itn = el._sum = None
+        el = el.parent
 
 
 class Node:
-    __slots__ = ("parent",)
+    __slots__ = ("parent", "_pos")
 
     # class-level type flags: hot traversal loops read these instead of
     # isinstance() (2.4M isinstance calls showed up in extraction profiles)
@@ -40,28 +53,52 @@ class Node:
 
     def __init__(self) -> None:
         self.parent: Optional[Element] = None
+        self._pos = 0
 
     # -- tree position ----------------------------------------------------
+    def _index(self) -> int:
+        """Position in the parent's children: the hint when it still holds
+        (or is off by one after an edit next to this node), else a scan."""
+        sibs = self.parent.children
+        i = self._pos
+        if i < len(sibs) and sibs[i] is self:
+            return i
+        if 0 < i <= len(sibs) and sibs[i - 1] is self:
+            i -= 1
+        elif i + 1 < len(sibs) and sibs[i + 1] is self:
+            i += 1
+        else:
+            i = sibs.index(self)
+        self._pos = i
+        return i
+
     @property
     def index_in_parent(self) -> int:
         assert self.parent is not None
-        return self.parent.children.index(self)
+        return self._index()
 
     @property
     def next_sibling(self) -> Optional["Node"]:
         if self.parent is None:
             return None
         sibs = self.parent.children
-        i = sibs.index(self)
-        return sibs[i + 1] if i + 1 < len(sibs) else None
+        i = self._index() + 1
+        if i < len(sibs):
+            nxt = sibs[i]
+            nxt._pos = i
+            return nxt
+        return None
 
     @property
     def previous_sibling(self) -> Optional["Node"]:
         if self.parent is None:
             return None
-        sibs = self.parent.children
-        i = sibs.index(self)
-        return sibs[i - 1] if i > 0 else None
+        i = self._index() - 1
+        if i >= 0:
+            prev = self.parent.children[i]
+            prev._pos = i
+            return prev
+        return None
 
     @property
     def next_element_sibling(self) -> Optional["Element"]:
@@ -80,38 +117,44 @@ class Node:
     # -- mutation ----------------------------------------------------------
     def remove(self) -> "Node":
         """Detach from parent; returns self."""
-        if self.parent is not None:
-            self.parent.children.remove(self)
+        parent = self.parent
+        if parent is not None:
+            del parent.children[self._index()]
             self.parent = None
-            _EPOCH[0] += 1
+            invalidate(parent)
         return self
 
     def replace_with(self, other: "Node") -> None:
         assert self.parent is not None
         parent = self.parent
-        i = parent.children.index(self)
+        i = self._index()
         other.remove()
         parent.children[i] = other
         other.parent = parent
+        other._pos = i
         self.parent = None
-        _EPOCH[0] += 1
+        invalidate(parent)
 
     def insert_before(self, new: "Node") -> None:
         """Insert ``new`` as previous sibling of self."""
         assert self.parent is not None
         new.remove()
-        i = self.parent.children.index(self)
-        self.parent.children.insert(i, new)
-        new.parent = self.parent
-        _EPOCH[0] += 1
+        parent = self.parent
+        i = self._index()
+        parent.children.insert(i, new)
+        new.parent = parent
+        new._pos = i
+        invalidate(parent)
 
     def insert_after(self, new: "Node") -> None:
         assert self.parent is not None
         new.remove()
-        i = self.parent.children.index(self)
-        self.parent.children.insert(i + 1, new)
-        new.parent = self.parent
-        _EPOCH[0] += 1
+        parent = self.parent
+        i = self._index() + 1
+        parent.children.insert(i, new)
+        new.parent = parent
+        new._pos = i
+        invalidate(parent)
 
     # -- text --------------------------------------------------------------
     @property
@@ -136,7 +179,8 @@ class Text(Node):
     is_text = True
 
     def __init__(self, data: str) -> None:
-        super().__init__()
+        self.parent = None
+        self._pos = 0
         self.data = data
 
     @property
@@ -162,20 +206,25 @@ class Comment(Node):
 
 
 class Element(Node):
-    __slots__ = ("tag", "attrs", "children", "readability", "_flags", "_tc", "_itn")
+    __slots__ = (
+        "tag", "attrs", "children", "readability", "_flags", "_fresh", "_tc", "_itn", "_sum",
+    )
 
     is_element = True
 
     def __init__(self, tag: str, attrs: Optional[dict] = None) -> None:
-        super().__init__()
+        self.parent = None
+        self._pos = 0
         self.tag = tag
         self.attrs: dict = attrs if attrs is not None else {}
         self.children: list[Node] = []
         # side-band annotation slot (JS: node.readability = {contentScore})
         self.readability: Optional[dict] = None
         self._flags: int = 0  # bit flags: 1=svg-namespace, 2=data-table mark
-        self._tc = None  # (epoch, text_content) cache
-        self._itn = None  # (epoch, normalized inner_text) cache (core.text)
+        self._fresh = False  # subtree caches below may be read (see invalidate)
+        self._tc = None  # text_content cache
+        self._itn = None  # normalized inner_text cache (core.text)
+        self._sum = None  # subtree summary cache (core.readability)
 
     # SVG-namespace mark: in a real DOM, SVG elements have a non-string
     # className, which makes every class-string heuristic skip them.
@@ -191,10 +240,11 @@ class Element(Node):
         return bool(self._flags & 2)
 
     def set_data_table(self, value: bool) -> None:
-        if value:
-            self._flags |= 2
-        else:
-            self._flags &= ~2
+        flags = (self._flags | 2) if value else (self._flags & ~2)
+        if flags != self._flags:
+            self._flags = flags
+            # ancestors' subtree summaries count data tables
+            invalidate(self.parent)
 
     # -- attributes ---------------------------------------------------------
     def get_attr(self, name: str, default: Optional[str] = None) -> Optional[str]:
@@ -223,9 +273,10 @@ class Element(Node):
     # -- children -----------------------------------------------------------
     def append_child(self, node: Node) -> Node:
         node.remove()
+        node._pos = len(self.children)
         self.children.append(node)
         node.parent = self
-        _EPOCH[0] += 1
+        invalidate(self)
         return node
 
     def element_children(self) -> list["Element"]:
@@ -358,16 +409,15 @@ class Element(Node):
     # -- text ------------------------------------------------------------------
     @property
     def text_content(self) -> str:
-        ep = _EPOCH[0]
         tc = self._tc
-        if tc is not None and tc[0] == ep:
-            return tc[1]
+        if tc is not None:
+            return tc
         # Iterative flat pre-order walk (broken crawl HTML nests thousands of
-        # elements deep — recursion would overflow). Fresh descendant caches
+        # elements deep — recursion would overflow). Cached descendant texts
         # are consumed in place, so the common bottom-up access pattern of the
         # scoring phases (per-paragraph inner_text, then overlapping ancestor
-        # chains) still reuses cached subtrees; only the queried root's cache
-        # is filled.
+        # chains) still reuses them; only the queried root's cache is filled,
+        # and every element the walk covers is marked fresh.
         parts: list[str] = []
         append = parts.append
         stack: list = list(self.children)
@@ -379,9 +429,10 @@ class Element(Node):
                 append(node.data)
             elif node.is_element:
                 ntc = node._tc
-                if ntc is not None and ntc[0] == ep:
-                    append(ntc[1])
+                if ntc is not None:
+                    append(ntc)
                 else:
+                    node._fresh = True
                     kids = node.children
                     if kids:
                         if len(kids) == 1:
@@ -389,33 +440,33 @@ class Element(Node):
                         else:
                             stack.extend(reversed(kids))
         text = "".join(parts)
-        self._tc = (ep, text)
+        self._fresh = True
+        self._tc = text
         return text
 
     def has_descendant_tag(self, *names: str) -> bool:
         """True iff any descendant element's tag is in ``names`` — the
         early-exit form of ``bool(get_elements_by_tag_name(*names))`` (no
-        snapshot list, stops at the first hit)."""
-        stack: list = list(self.children)
+        snapshot list, stops at the first hit, in document order)."""
+        stack: list = list(reversed(self.children))
         while stack:
             node = stack.pop()
             if node.is_element:
                 if node.tag in names:
                     return True
-                stack.extend(node.children)
+                stack.extend(reversed(node.children))
         return False
 
     def has_text_content(self, ws_chars: str) -> bool:
         """True iff any descendant text node has a char outside ``ws_chars``
         — equivalent to ``text_content.strip(ws_chars) != ""`` but with an
-        early exit at the first contentful text node, no join, and no cache
-        fill. Consumes fresh ``text_content`` caches where present (checks
-        the cached string instead of descending)."""
-        ep = _EPOCH[0]
+        early exit at the first contentful text node in document order, no
+        join, and no cache fill. Consumes cached ``text_content`` strings
+        where present (checks the cached string instead of descending)."""
         tc = self._tc
-        if tc is not None and tc[0] == ep:
-            return bool(tc[1].strip(ws_chars))
-        stack: list = list(self.children)
+        if tc is not None:
+            return bool(tc.strip(ws_chars))
+        stack: list = list(reversed(self.children))
         while stack:
             node = stack.pop()
             if node.is_text:
@@ -423,11 +474,11 @@ class Element(Node):
                     return True
             elif node.is_element:
                 ntc = node._tc
-                if ntc is not None and ntc[0] == ep:
-                    if ntc[1].strip(ws_chars):
+                if ntc is not None:
+                    if ntc.strip(ws_chars):
                         return True
                 else:
-                    stack.extend(node.children)
+                    stack.extend(reversed(node.children))
         return False
 
     def set_text(self, text: str) -> None:
@@ -438,7 +489,10 @@ class Element(Node):
     # -- misc --------------------------------------------------------------------
     def set_tag(self, tag: str) -> "Element":
         """Rename in place (reference _setNodeTag keeps attrs + children)."""
-        self.tag = tag
+        if tag != self.tag:
+            self.tag = tag
+            # ancestors' subtree summaries count tags
+            invalidate(self.parent)
         return self
 
     def clone(self, deep: bool = True) -> "Element":
@@ -456,18 +510,20 @@ class Element(Node):
                     copy = Element(c.tag, dict(c.attrs))
                     copy._flags = c._flags
                     copy.parent = dst
+                    copy._pos = len(kids)
                     kids.append(copy)
                     if c.children:
                         stack.append((c, copy))
                 elif c.is_text:
                     t = Text(c.data)
                     t.parent = dst
+                    t._pos = len(kids)
                     kids.append(t)
                 elif isinstance(c, Comment):
                     cm = Comment(c.data)
                     cm.parent = dst
+                    cm._pos = len(kids)
                     kids.append(cm)
-        _EPOCH[0] += 1
         return el
 
     def __repr__(self) -> str:  # pragma: no cover

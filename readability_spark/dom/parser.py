@@ -19,6 +19,7 @@ charset_normalizer fallback → UTF-8 with replacement.
 from __future__ import annotations
 
 import re
+from html import unescape
 from html.parser import HTMLParser
 from typing import Optional
 
@@ -69,13 +70,14 @@ _META_CHARSET_RE = re.compile(
 )
 
 
-# Fast-path start-tag recognition (see _TreeBuilder.parse_starttag). Each
-# piece is deliberately NARROWER than the stdlib tolerant grammar: a tag the
-# fast regex matches is one the stdlib path would consume to the same end
-# position with the same (tag, attrs) result; everything else (entities in
-# values needing unescape, '>'/'<'/quotes inside values, '='-less chains,
-# doubled '=', attribute names with exotic characters, unterminated tags)
-# fails the match and takes the stdlib path.
+# Fast-path tag recognition for the token loop (see _TreeBuilder.goahead).
+# Each pattern is deliberately NARROWER than the stdlib tolerant grammar: a
+# tag the fast regex matches is one the stdlib path would consume to the
+# same end position with the same (tag, attrs) result; everything else
+# (entities in values needing unescape, '>'/'<'/quotes inside values,
+# '='-less chains, doubled '=', attribute names with exotic characters,
+# whitespace inside end tags, unterminated tags) fails the match and takes
+# the stdlib path.
 _FAST_ATTR_BODY = (
     r"\s+{o}[a-zA-Z_:][a-zA-Z0-9_:.\-]*{c}"  # simple attribute name
     r"(?:\s*=\s*{o}"
@@ -90,6 +92,24 @@ _FAST_STARTTAG = re.compile(
     r"\s*(/?)>"
 )
 _FAST_ATTR = re.compile(_FAST_ATTR_BODY.format(o="(", c=")"))
+_FAST_ENDTAG = re.compile(r"</([a-zA-Z][-.a-zA-Z0-9:_]*)>")
+_STARTTAG_OPEN = re.compile(r"<[a-zA-Z]")
+_AMP_END = re.compile(r"[\s;]")
+
+_STRUCTURAL = ("html", "head", "body")
+# tags whose push/pop also updates a builder flag (_push, _close_top)
+_STACK_FLAGGED = frozenset({"head"}) | _FOREIGN
+
+
+def _attr_dict(attrs) -> dict:
+    """stdlib (name, value) pairs -> the element's attribute dict: names
+    lowercased, the first of duplicate names wins, valueless -> ""."""
+    out: dict = {}
+    for name, value in attrs:
+        name = name.lower()
+        if name and name not in out:
+            out[name] = value if value is not None else ""
+    return out
 
 
 class _TreeBuilder(HTMLParser):
@@ -97,6 +117,10 @@ class _TreeBuilder(HTMLParser):
         super().__init__(convert_charrefs=True)
         self.document = Document()
         self.stack: list[Element] = [self.document]
+        # tag -> how many elements with that tag are on the open stack: an
+        # end tag or an implied close whose tag is not open is a no-op, found
+        # in O(1) instead of by a stack scan (O(depth^2) on deep crawl HTML)
+        self._open_tags: dict = {}
         self._foreign_depth = 0
         # True only while a <head> element is on the open stack — lets
         # _exit_head_if_open early-return without scanning the stack on
@@ -110,75 +134,213 @@ class _TreeBuilder(HTMLParser):
         # the scan showed up at ~4% of parse time on the golden corpus.
         return j
 
-    def parse_starttag(self, i: int) -> int:
-        """Fast path for the overwhelmingly common simple start tag.
+    def goahead(self, end: int) -> None:
+        """The stdlib ``HTMLParser.goahead`` loop (convert_charrefs=True),
+        with text, simple start tags and simple end tags handled inline.
 
-        The stdlib implementation runs 4+ regex matches and an unescape per
-        tag (check_for_whole_start_tag, tagfind, per-attribute attrfind) —
-        ~20% of parse time on the golden corpus. One anchored regex handles
-        tags whose attributes are simple (no '&' so unescape is an identity,
-        no '>'/'<' inside quoted values, whitespace-separated names); any
-        tag it cannot prove simple falls back to the stdlib tolerant path,
-        byte-for-byte identical consumption either way (differential test:
-        tests/test_parser.py::test_fast_starttag_path_matches_stdlib)."""
-        m = _FAST_STARTTAG.match(self.rawdata, i)
-        if m is None:
-            return super().parse_starttag(i)
-        tag = m.group(1)
-        if not tag.islower():
-            tag = tag.lower()
-        self.lasttag = tag
-        attrs = []
-        raw_attrs = m.group(2)
-        if raw_attrs:
-            for am in _FAST_ATTR.finditer(raw_attrs):
-                name, value = am.group(1, 2)
-                if value is not None and value[:1] in "\"'":
-                    value = value[1:-1]
-                attrs.append((name if name.islower() else name.lower(), value))
-        if m.group(3):
-            self.handle_startendtag(tag, attrs)
-        else:
-            self.handle_starttag(tag, attrs)
-            if tag in self.CDATA_CONTENT_ELEMENTS:
-                self.set_cdata_mode(tag)
-        return m.end()
+        The stdlib loop costs several regex matches, an unescape and three
+        or four method calls per tag; here one anchored regex recognises a
+        tag whose attributes are simple and the node is appended directly.
+        Every other construct (comments, declarations, CDATA-mode content,
+        tags the fast regexes cannot prove simple, incomplete input) goes to
+        the stdlib method the stdlib loop would call, and the tree is the
+        same either way (differential test: tests/test_dom.py)."""
+        rawdata = self.rawdata
+        i = 0
+        n = len(rawdata)
+        find = rawdata.find
+        startswith = rawdata.startswith
+        fast_start = _FAST_STARTTAG.match
+        fast_end = _FAST_ENDTAG.match
+        attr_list = _FAST_ATTR.findall
+        stack = self.stack
+        open_tags = self._open_tags
+        open_keys = open_tags.keys()
+        cdata_tags = self.CDATA_CONTENT_ELEMENTS
+        while i < n:
+            cdata = self.cdata_elem
+            if not cdata:
+                j = find("<", i)
+                if j < 0:
+                    # a charref may be cut in half at the end of a feed
+                    amppos = rawdata.rfind("&", max(i, n - 34))
+                    if amppos >= 0 and not _AMP_END.search(rawdata, amppos):
+                        break
+                    j = n
+            else:
+                match = self.interesting.search(rawdata, i)
+                if not match:
+                    break
+                j = match.start()
+            if i < j:
+                data = rawdata[i:j]
+                if cdata:
+                    self.handle_data(data)
+                else:
+                    if "&" in data:
+                        data = unescape(data)
+                    top = stack[-1]
+                    if top.tag == "head":
+                        self.handle_data(data)
+                    elif data:
+                        kids = top.children
+                        if kids and kids[-1].is_text:
+                            kids[-1].data += data
+                        else:
+                            t = Text(data)
+                            t.parent = top
+                            t._pos = len(kids)
+                            kids.append(t)
+            i = j
+            if i == n:
+                break
+            # rawdata[i] == "<": convert_charrefs leaves no "&" branch
+            m = None if cdata else fast_start(rawdata, i)
+            if m is not None:
+                tag, raw_attrs, self_closing = m.groups()
+                if not tag.islower():
+                    tag = tag.lower()
+                attrs: dict = {}
+                if raw_attrs:
+                    # findall gives "" for a valueless attribute, and a
+                    # matched value is never empty
+                    for name, value in attr_list(raw_attrs):
+                        if value and value[0] in "\"'":
+                            value = value[1:-1]
+                        if not name.islower():
+                            name = name.lower()
+                        if name not in attrs:
+                            attrs[name] = value
+                if self_closing:
+                    self._startend(tag, attrs)
+                elif (
+                    self._foreign_depth
+                    or self._head_open
+                    or tag in _STRUCTURAL
+                    or tag in cdata_tags
+                    or tag in _FOREIGN
+                ):
+                    self._start(tag, attrs)
+                    if tag in cdata_tags:
+                        self.set_cdata_mode(tag)
+                else:
+                    # in-body start tag: _start minus the cases above
+                    rule = _AUTO_CLOSE.get(tag)
+                    if (tag in _P_CLOSERS and "p" in open_tags) or (
+                        rule is not None and not open_keys.isdisjoint(rule[0])
+                    ):
+                        self._close_implied(tag)
+                    top = stack[-1]
+                    el = Element(tag, attrs)
+                    if top._flags & 1:
+                        el._flags = 1
+                    kids = top.children
+                    el.parent = top
+                    el._pos = len(kids)
+                    kids.append(el)
+                    if tag not in VOID_ELEMENTS:
+                        stack.append(el)
+                        open_tags[tag] = open_tags.get(tag, 0) + 1
+                i = m.end()
+                continue
+            m = None if cdata else fast_end(rawdata, i)
+            if m is not None:
+                tag = m.group(1)
+                if not tag.islower():
+                    tag = tag.lower()
+                if (
+                    stack[-1].tag == tag
+                    and len(stack) > 1
+                    and tag not in VOID_ELEMENTS
+                    and tag not in _STACK_FLAGGED
+                ):
+                    stack.pop()
+                    count = open_tags[tag] - 1
+                    if count:
+                        open_tags[tag] = count
+                    else:
+                        del open_tags[tag]
+                else:
+                    self.handle_endtag(tag)
+                i = m.end()
+                continue
+            if _STARTTAG_OPEN.match(rawdata, i):
+                k = self.parse_starttag(i)
+            elif startswith("</", i):
+                k = self.parse_endtag(i)
+            elif startswith("<!--", i):
+                k = self.parse_comment(i)
+            elif startswith("<?", i):
+                k = self.parse_pi(i)
+            elif startswith("<!", i):
+                k = self.parse_html_declaration(i)
+            elif (i + 1) < n:
+                self.handle_data("<")
+                k = i + 1
+            else:
+                break
+            if k < 0:
+                if not end:
+                    break
+                k = find(">", i + 1)
+                if k < 0:
+                    k = find("<", i + 1)
+                    if k < 0:
+                        k = i + 1
+                else:
+                    k += 1
+                if self.cdata_elem:
+                    self.handle_data(rawdata[i:k])
+                else:
+                    self.handle_data(unescape(rawdata[i:k]))
+            i = k
+        if end and i < n and not self.cdata_elem:
+            self.handle_data(unescape(rawdata[i:n]))
+            i = n
+        self.rawdata = rawdata[i:]
 
     @property
     def top(self) -> Element:
         return self.stack[-1]
 
-    def _open(self, tag: str, attrs) -> Element:
-        el = Element(tag)
-        for name, value in attrs:
-            name = name.lower()
-            if name and name not in el.attrs:
-                el.attrs[name] = value if value is not None else ""
-        if tag == "svg" or self.top.is_svg:
+    def _open(self, tag: str, attrs: dict) -> Element:
+        el = Element(tag, attrs)
+        top = self.stack[-1]
+        if tag == "svg" or top.is_svg:
             el.mark_svg()
-        self.top.append_child(el)
+        top.append_child(el)
+        self._push(el)
+        return el
+
+    def _push(self, el: Element) -> None:
         self.stack.append(el)
+        tag = el.tag
+        self._open_tags[tag] = self._open_tags.get(tag, 0) + 1
         if tag in _FOREIGN:
             self._foreign_depth += 1
         elif tag == "head":
             self._head_open = True
-        return el
 
     def _close_top(self) -> None:
         el = self.stack.pop()
-        if el.tag == "head":
+        tag = el.tag
+        self._open_tags[tag] -= 1
+        if not self._open_tags[tag]:
+            del self._open_tags[tag]
+        if tag == "head":
             self._head_open = False
-        if el.tag in _FOREIGN:
+        if tag in _FOREIGN:
             self._foreign_depth -= 1
 
     def _close_implied(self, tag: str) -> None:
         """Pop elements implied-closed by a new start tag."""
-        if tag in _P_CLOSERS:
+        stack = self.stack
+        if tag in _P_CLOSERS and "p" in self._open_tags:
             # close an open <p> within scope
-            for i in range(len(self.stack) - 1, 0, -1):
-                t = self.stack[i].tag
+            for i in range(len(stack) - 1, 0, -1):
+                t = stack[i].tag
                 if t == "p":
-                    while len(self.stack) > i:
+                    while len(stack) > i:
                         self._close_top()
                     break
                 if t in _SCOPE_BOUNDARY:
@@ -186,10 +348,12 @@ class _TreeBuilder(HTMLParser):
         rule = _AUTO_CLOSE.get(tag)
         if rule is not None:
             closes, boundary = rule
-            for i in range(len(self.stack) - 1, 0, -1):
-                t = self.stack[i].tag
+            if self._open_tags.keys().isdisjoint(closes):
+                return
+            for i in range(len(stack) - 1, 0, -1):
+                t = stack[i].tag
                 if t in closes:
-                    while len(self.stack) > i:
+                    while len(stack) > i:
                         self._close_top()
                     break
                 if t in boundary or t in ("html", "body"):
@@ -222,18 +386,17 @@ class _TreeBuilder(HTMLParser):
             body = Element("body")
             html.append_child(body)
         if self.stack[-1] is html:
-            self.stack.append(body)
+            self._push(body)
 
-    # -- HTMLParser hooks -----------------------------------------------------
-    def handle_starttag(self, tag: str, attrs) -> None:
-        tag = tag.lower()
+    def _start(self, tag: str, attrs: dict) -> None:
+        """A start tag (lowercase name, attribute dict)."""
         if (
             self._foreign_depth == 0
             and tag not in _HEAD_CONTENT
             and tag not in ("html", "head")
         ):
             self._exit_head_if_open()
-        if tag in ("html", "head", "body"):
+        if tag in _STRUCTURAL:
             # merge attrs into existing structural element if present
             existing = None
             if tag == "html":
@@ -244,24 +407,21 @@ class _TreeBuilder(HTMLParser):
                         existing = c
                         break
             if existing is not None:
-                for name, value in attrs:
-                    name = name.lower()
-                    if name and name not in existing.attrs:
-                        existing.attrs[name] = value if value is not None else ""
+                for name, value in attrs.items():
+                    if name not in existing.attrs:
+                        existing.attrs[name] = value
                 if existing not in self.stack:
                     # re-enter (e.g. content after a premature </body>)
-                    self.stack.append(existing)
-                    if tag == "head":
-                        self._head_open = True
+                    self._push(existing)
                 return
         if self._foreign_depth == 0:
             self._close_implied(tag)
-        el = self._open(tag, attrs)
+        self._open(tag, attrs)
         if tag in VOID_ELEMENTS and self._foreign_depth == 0:
             self._close_top()
 
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        tag = tag.lower()
+    def _startend(self, tag: str, attrs: dict) -> None:
+        """A self-closing start tag ``<tag .../>``."""
         if self._foreign_depth > 0 or tag in VOID_ELEMENTS:
             if self._foreign_depth == 0:
                 self._close_implied(tag)
@@ -269,12 +429,19 @@ class _TreeBuilder(HTMLParser):
             self._close_top()
         else:
             # HTML semantics: <div/> is just an open tag
-            self.handle_starttag(tag, attrs)
+            self._start(tag, attrs)
+
+    # -- HTMLParser hooks -----------------------------------------------------
+    def handle_starttag(self, tag: str, attrs) -> None:
+        self._start(tag.lower(), _attr_dict(attrs))
+
+    def handle_startendtag(self, tag: str, attrs) -> None:
+        self._startend(tag.lower(), _attr_dict(attrs))
 
     def handle_endtag(self, tag: str) -> None:
         tag = tag.lower()
-        if tag in VOID_ELEMENTS:
-            return
+        if tag in VOID_ELEMENTS or tag not in self._open_tags:
+            return  # unmatched end tag: ignore
         for i in range(len(self.stack) - 1, 0, -1):
             if self.stack[i].tag == tag:
                 while len(self.stack) > i:
@@ -283,7 +450,6 @@ class _TreeBuilder(HTMLParser):
             # don't let a stray end tag close past a scope boundary
             if self.stack[i].tag in _SCOPE_BOUNDARY and tag not in _SCOPE_BOUNDARY:
                 return
-        # unmatched end tag: ignore
 
     def handle_data(self, data: str) -> None:
         if not data:

@@ -178,11 +178,10 @@ def main(argv=None) -> int:
     elapsed = time.time() - t0
 
     metrics = dict(obs.get)
+    # an empty run has no rows to sum
+    metrics["boilerplate_bytes_stripped"] = metrics.get("boilerplate_bytes_stripped") or 0
     metrics["wall_sec"] = round(elapsed, 3)
     metrics["docs_per_sec"] = round(metrics.get("docs", 0) / elapsed, 2) if elapsed else None
-    metrics["boilerplate_bytes_stripped"] = (
-        (metrics.get("html_bytes") or 0) - (metrics.get("content_bytes") or 0)
-    )
 
     if metrics.get("docs"):
         if args.output.startswith("iceberg:"):

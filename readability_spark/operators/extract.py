@@ -106,14 +106,21 @@ def _extract_one(url: Optional[str], html, options: dict, include_html: bool) ->
     return row
 
 
-def make_extract_batches(options: Optional[dict] = None, include_html: bool = True):
+def make_extract_batches(
+    options: Optional[dict] = None, include_html: bool = True, html_bytes: bool = False
+):
     """Build the mapInPandas function (options captured in the closure,
-    broadcast implicitly with the serialized function)."""
+    broadcast implicitly with the serialized function). The one per-batch
+    extraction loop: ``extract`` and the job path
+    (``plans.pipeline.observed_extract``) both run it. ``html_bytes=True``
+    appends each page's input size to its row (``ARTICLE_SCHEMA`` plus a
+    long ``html_bytes`` column)."""
     options = dict(options or {})
     if not include_html:
         # text-only output: skip building the content-HTML string inside
         # parse() (canonical_text reads the article DOM directly)
         options.setdefault("serialize_content", False)
+    names = [f.name for f in ARTICLE_SCHEMA.fields] + (["html_bytes"] if html_bytes else [])
 
     def extract_batches(batches: Iterator) -> Iterator:
         import gc
@@ -127,7 +134,6 @@ def make_extract_batches(options: Optional[dict] = None, include_html: bool = Tr
         # cyclic garbage the delay accumulates
         tune_worker_gc()
 
-        names = [f.name for f in ARTICLE_SCHEMA.fields]
         for pdf in batches:
             # numpy iteration: pandas Series.__iter__ boxes per element
             urls = pdf["url"].to_numpy() if "url" in pdf.columns else [None] * len(pdf)
@@ -136,6 +142,9 @@ def make_extract_batches(options: Optional[dict] = None, include_html: bool = Tr
                 _extract_one(u, h, options, include_html)
                 for u, h in zip(urls, htmls)
             ]
+            if html_bytes:
+                for row, h in zip(rows, htmls):
+                    row["html_bytes"] = len(h) if h is not None else 0
             gc.collect()
             yield pd.DataFrame(rows, columns=names)
 

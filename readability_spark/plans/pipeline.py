@@ -18,8 +18,9 @@ extraction UDF (SURVEY.md §4):
   pending buckets. Output is partitioned by bucket so each bucket's files are
   replaced atomically (dynamic partition overwrite).
 - **Metrics via ``observe``**: docs seen/ok, extracted bytes, boilerplate
-  bytes stripped — collected on the driver without a second pass; plus an
-  extracted-length histogram as a tiny aggregate.
+  bytes stripped (input bytes minus the bytes the job keeps: article HTML,
+  or text under ``include_html=False``) — collected on the driver without a
+  second pass; plus an extracted-length histogram as a tiny aggregate.
 """
 
 from __future__ import annotations
@@ -134,7 +135,7 @@ def observed_extract(
     Returns (result_df, observation); observation.get is available after the
     first action on result_df.
     """
-    from readability_spark.operators.extract import ARTICLE_SCHEMA, _extract_one
+    from readability_spark.operators.extract import ARTICLE_SCHEMA, make_extract_batches
     from pyspark.sql.types import LongType, StructField, StructType
 
     if salt:
@@ -142,21 +143,9 @@ def observed_extract(
 
     # keep html size through the UDF boundary for the boilerplate metric
     schema = StructType(ARTICLE_SCHEMA.fields + [StructField("html_bytes", LongType(), True)])
-    opts = dict(options or {})
-    out_cols = [f.name for f in schema.fields]
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for u, h in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-                row = _extract_one(u, h, opts, include_html)
-                row["html_bytes"] = len(h) if h is not None else 0
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    result = pages.select("url", "html").mapInPandas(batches, schema)
+    result = pages.select("url", "html").mapInPandas(
+        make_extract_batches(options, include_html, html_bytes=True), schema
+    )
     result = with_bucket(result, n_buckets)
     if not salt:
         # the bucket-partitioned write needs alignment, or every task
@@ -165,6 +154,8 @@ def observed_extract(
         # rows) — this IS the default plan's only exchange.
         result = result.repartition(n_buckets, F.col("bucket"))
 
+    # the bytes the job keeps: the article HTML, or its text under --no-html
+    kept = F.octet_length("content_html" if include_html else "text")
     obs = Observation("extract_metrics")
     result = result.observe(
         obs,
@@ -173,6 +164,9 @@ def observed_extract(
         F.sum("html_bytes").alias("html_bytes"),
         F.sum(F.coalesce(F.length("content_html"), F.lit(0))).alias("content_bytes"),
         F.sum(F.coalesce(F.col("length"), F.lit(0))).alias("text_chars"),
+        (F.sum("html_bytes") - F.sum(F.coalesce(kept, F.lit(0)))).alias(
+            "boilerplate_bytes_stripped"
+        ),
     )
     return result, obs
 

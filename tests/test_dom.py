@@ -197,24 +197,11 @@ def test_pretty_html_deep_no_recursion():
 
 
 def test_fast_starttag_path_matches_stdlib():
-    """The fast start-tag regex must consume exactly what the stdlib
-    tolerant path consumes, producing an identical DOM — on simple tags
-    (where it engages) and on every pathological shape (where it must
-    fall back rather than diverge)."""
-    import html.parser as HP
-
-    import readability_spark.dom.parser as P
-    from readability_spark.dom.serializer import outer_html
-
-    class Slow(P._TreeBuilder):
-        def parse_starttag(self, i):
-            return HP.HTMLParser.parse_starttag(self, i)
-
-    def dom(cls, html):
-        b = cls()
-        b.feed(html)
-        b.close()
-        return outer_html(b.document)
+    """The token loop's inline start/end-tag paths must consume exactly what
+    the stdlib tolerant path consumes, producing an identical DOM — on
+    simple tags (where they engage) and on every pathological shape (where
+    they must fall back rather than diverge)."""
+    from tests.test_parser_differential import tree_of
 
     cases = [
         '<a href="x">t</a>', '<a href=x>t</a>', '<br/>', '<img src=a/>',
@@ -228,10 +215,13 @@ def test_fast_starttag_path_matches_stdlib():
         '<a\tb="c">', '<a\nb="c">', '<a b="c&#64;d">', '<a b>',
         '<p class>', '<em FOO=bar>', '<a 0bad=1>', '<a -x=1>',
         '<a b=c=d>', "<a b=\"c\" d='e' f=g h>", '<a href="x" / >',
-        '<a href=x//>', '<div><p><a',
+        '<a href=x//>', '<div><p><a', '<div></DIV>', '<p>x</p >', '</ p>',
+        '<div><span>x</span></div></div></p>', '<ul><li>a<li>b</ul>',
+        '<table><tr><td>a<td>b</table>', '<p>a<div>b</div>', '<br></br>',
+        '<head><title>t</title><p>x', '<script>a</script', 'x &amp',
     ]
     for c in cases:
-        assert dom(P._TreeBuilder, c) == dom(Slow, c), c
+        assert tree_of(c, stdlib=False) == tree_of(c, stdlib=True), c
 
 
 def test_has_text_content_matches_full_walk():

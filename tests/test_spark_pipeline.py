@@ -80,6 +80,24 @@ def test_observed_extract_metrics(spark, fixture_pages):
     assert m["html_bytes"] > m["content_bytes"] > 0  # boilerplate was stripped
 
 
+def test_observed_extract_boilerplate_under_no_html(spark):
+    """Text-only runs keep the text, so the stripped bytes are the input
+    minus the text bytes, not the whole input."""
+    from readability_spark.plans.pipeline import observed_extract
+    from tests.crawl_goldens import corpus
+
+    pages = spark.createDataFrame(
+        [(url, html) for pid, url, html in corpus()[:40]], "url string, html binary"
+    )
+    result, obs = observed_extract(pages, include_html=False, n_buckets=4)
+    rows = result.collect()
+    m = dict(obs.get)
+    kept = sum(len(r["text"].encode()) for r in rows if r["text"] is not None)
+    assert kept > 0 and all(r["content_html"] is None for r in rows)
+    assert m["boilerplate_bytes_stripped"] == m["html_bytes"] - kept
+    assert m["boilerplate_bytes_stripped"] < m["html_bytes"]
+
+
 def test_resume_protocol(spark, fixture_pages, tmp_path):
     from readability_spark.plans.pipeline import (
         append_manifest,
