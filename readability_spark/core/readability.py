@@ -32,7 +32,7 @@ from typing import Optional
 from readability_spark.core import text as T
 from readability_spark.core.css import iter_declarations
 from readability_spark.core.urls import DocumentUrl, is_base64_data_url
-from readability_spark.dom.node import Comment, Document, Element, Node, Text, invalidate
+from readability_spark.dom.node import Comment, Document, Element, Node, Text
 from readability_spark.dom.parser import parse_html
 from readability_spark.dom.serializer import inner_html
 
@@ -212,9 +212,6 @@ def _build_tag_lanes() -> dict:
 _TAG_LANES = _build_tag_lanes()
 _DATA_TABLE_INC = 1 << (_LANE * _L_DATA_TABLE)
 _ANY_COMMA_SHIFT = _LANE * _L_ANY_COMMAS
-_COMMAS_RE = T.COMMAS_RE
-_JS_WS = T.JS_WS_CHARS
-_WS_RUN2 = T._WS_RUN2
 
 
 def _lane(packed: int, lane: int) -> int:
@@ -234,8 +231,9 @@ def _summary(root: Element) -> tuple:
     if s is not None:
         return s
     lanes = _TAG_LANES
-    ws = _JS_WS
-    run2 = _WS_RUN2
+    ws = T.JS_WS_CHARS
+    run2 = T._WS_RUN2
+    commas_re = T.COMMAS_RE
     any_shift = _ANY_COMMA_SHIFT
     stack = [root]
     while stack:
@@ -281,7 +279,7 @@ def _summary(root: Element) -> tuple:
                     continue
                 commas = d.count(",")
                 packed += commas + (
-                    (commas if d.isascii() else len(_COMMAS_RE.findall(d))) << any_shift
+                    (commas if d.isascii() else len(commas_re.findall(d))) << any_shift
                 )
                 core = d.strip(ws)
                 if not core:
@@ -559,7 +557,9 @@ class Readability:
         body_start = body_end = 0
         body_level = -1
         out: list = []
-        stack: list = []
+        # the walk of Element.get_elements_by_tag_name
+        lists: list = []
+        resume: list = []
         children = self._doc.children
         i, n = 0, len(children)
         while True:
@@ -572,17 +572,19 @@ class Readability:
                     if node is body:
                         body_start = body_end = len(out)
                     if node.children:
-                        stack.append((children, i, n))
+                        lists.append(children)
+                        resume.append(i)
                         if node is body:
-                            body_level = len(stack)
+                            body_level = len(lists)
                         children = node.children
                         i, n = 0, len(children)
-            if len(stack) == body_level:
+            if len(lists) == body_level:
                 body_end = len(out)
                 body_level = -1
-            if not stack:
+            if not lists:
                 break
-            children, i, n = stack.pop()
+            children = lists.pop()
+            i, n = resume.pop(), len(children)
         self._snapshot_body = (body, body_start, body_end)
         self._snapshot_dirty = set()
         return out
