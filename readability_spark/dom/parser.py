@@ -144,7 +144,8 @@ class _TreeBuilder(HTMLParser):
         Every other construct (comments, declarations, CDATA-mode content,
         tags the fast regexes cannot prove simple, incomplete input) goes to
         the stdlib method the stdlib loop would call, and the tree is the
-        same either way (differential test: tests/test_dom.py)."""
+        same either way (differential tests:
+        tests/test_parser_differential.py)."""
         rawdata = self.rawdata
         i = 0
         n = len(rawdata)
