@@ -95,20 +95,10 @@ def _docs_slim(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _docs_p(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Historical alias: the fan-out now lives in ``_docs`` itself (every
-    query needs it, not just the media synthesizers — see _docs). Kept so
-    the media queries' call sites read unchanged; CollapseRepartition
-    folds the adjacent identical repartitions into one."""
-    return _docs(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism, F.col("doc_id")
-    )
-
-
 def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesized page table, fanned out across the session's parallelism.
 
-    Same single-row-group layout artifact as ``_docs_p``: the sf parquet is
+    Same single-row-group layout artifact as ``_docs``: the sf parquet is
     ONE row group, so every extraction-family query (extract, readerable,
     candidate probe, token-density elector) would otherwise run its heavy
     per-doc Python stage as a single task. The explicit url-hash
@@ -740,7 +730,7 @@ def _q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_audio_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from readability_spark.operators.audio import audio_sample_stats, synthesize_audio
 
-    return audio_sample_stats(synthesize_audio(_docs_p(spark, sf_dir)))
+    return audio_sample_stats(synthesize_audio(_docs(spark, sf_dir)))
 
 
 def _q_audio_resample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -754,14 +744,14 @@ def _q_audio_resample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_audio,
     )
 
-    resampled = audio_resample(synthesize_audio(_docs_p(spark, sf_dir)))
+    resampled = audio_resample(synthesize_audio(_docs(spark, sf_dir)))
     return audio_sample_stats(resampled.select("doc_id", "payload"))
 
 
 def _q_image_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from readability_spark.operators.imaging import image_pixel_stats, synthesize_images
 
-    return image_pixel_stats(synthesize_images(_docs_p(spark, sf_dir)))
+    return image_pixel_stats(synthesize_images(_docs(spark, sf_dir)))
 
 
 def _q_image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -775,7 +765,7 @@ def _q_image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_images,
     )
 
-    resized = image_resize(synthesize_images(_docs_p(spark, sf_dir)))
+    resized = image_resize(synthesize_images(_docs(spark, sf_dir)))
     return image_pixel_stats(resized.select("doc_id", "payload"))
 
 
@@ -1028,7 +1018,7 @@ def _q_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly."""
     from readability_spark.operators.pdftext import pdf_extract, synthesize_pdfs
 
-    out = pdf_extract(synthesize_pdfs(_docs_p(spark, sf_dir)))
+    out = pdf_extract(synthesize_pdfs(_docs(spark, sf_dir)))
     return out.filter("ok").select("doc_id", "n_pages", "text")
 
 
@@ -1276,7 +1266,7 @@ def _q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     from readability_spark.operators.multimodal import extract_media_metadata, synthesize_media
 
-    return extract_media_metadata(synthesize_media(_docs_p(spark, sf_dir)))
+    return extract_media_metadata(synthesize_media(_docs(spark, sf_dir)))
 
 
 
@@ -1294,7 +1284,7 @@ def _q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_media,
     )
 
-    return sample_frames(extract_media_metadata(synthesize_media(_docs_p(spark, sf_dir))))
+    return sample_frames(extract_media_metadata(synthesize_media(_docs(spark, sf_dir))))
 
 
 def _q_windowed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1714,7 +1704,7 @@ def _q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from readability_spark.operators.jpeg import jpeg_pixel_stats, synthesize_jpegs
 
-    return jpeg_pixel_stats(synthesize_jpegs(_docs_p(spark, sf_dir)))
+    return jpeg_pixel_stats(synthesize_jpegs(_docs(spark, sf_dir)))
 
 
 def _q_cdx_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1995,7 +1985,7 @@ def _image_stats_injected(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_images,
     )
 
-    imgs = with_injected_duplicates(synthesize_images(_docs_p(spark, sf_dir)))
+    imgs = with_injected_duplicates(synthesize_images(_docs(spark, sf_dir)))
     return image_pixel_stats(imgs)
 
 
@@ -2019,7 +2009,7 @@ def _audio_fp_injected(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from readability_spark.operators.dedup import with_injected_duplicates
 
-    wavs = with_injected_duplicates(synthesize_audio(_docs_p(spark, sf_dir)))
+    wavs = with_injected_duplicates(synthesize_audio(_docs(spark, sf_dir)))
     return audio_fingerprint(wavs)
 
 

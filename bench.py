@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32).
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the CPUs this
+process may run on), driver memory $SPARK_GRAFT_DRIVER_MEM (default: two
+fifths of physical memory).
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -18,7 +20,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+# two fifths of physical memory: the Python workers live outside the JVM heap
+DRIVER_MEM = os.environ.get(
+    "SPARK_GRAFT_DRIVER_MEM",
+    f"{os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') * 2 // 5 >> 30}g",
+)
 
 
 def build_spark(cpus: int):
@@ -30,7 +37,7 @@ def build_spark(cpus: int):
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", DRIVER_MEM)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
@@ -110,221 +117,10 @@ def main() -> int:
         "bm25_topk",
         "semdedup",
     }
-    # Queries whose PLAN changed this round run >=2 trials so the
-    # round-over-round table on them is falsifiable (VERDICT r4 item 3:
-    # single-trial rows made apparent 2-4x "regressions" unfalsifiable
-    # JVM-warmup noise). Regenerate per round from the round's diff.
-    plan_changed_this_round = {
-        # r5: conditional fan-out — slim family back to scan->agg
-        "url_canonical_dedup", "url_blocklist", "text_quality",
-        "text_fingerprints", "pii_scrub", "text_c4_clean", "line_dedup",
-        "chunk_dedup", "corpus_mix", "corpus_sequence_pack", "corpus_pack",
-        "corpus_build", "quality_classifier", "anchor_profile",
-        "crawl_frontier",
-        # r5: LSH-shortlist candidate generator
-        "bitext_pairs",
-    }
-    for name in (
-        "dedup_minhash_lsh",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "dedup_simhash64_near_pairs",
-        "url_canonical_dedup",
-        "url_blocklist",
-        "tokenfinder_paths",
-        "ann_cosine_topk",
-        "ann_int8_topk",
-        "ann_lsh_topk",
-        "ann_ivf_topk",
-        "dedup_clusters",
-        "dedup_incremental_near",
-        "corpus_pack",
-        "corpus_build",
-        "text_quality",
-        "text_repetition",
-        "text_gopher_rules",
-        "text_c4_clean",
-        "line_dedup",
-        "corpus_sequence_pack",
-        "corpus_mix",
-        "dsir_select",
-        "semdedup",
-        "image_pixel_stats",
-        "image_resize_stats",
-        "audio_sample_stats",
-        "audio_resample_stats",
-        "duplicate_spans",
-        "decontaminate",
-        "chunk_dedup",
-        "pii_scrub",
-        "text_fingerprints",
-        "bm25_topk",
-        "tfidf_topk",
-        "quality_classifier",
-        "lm_perplexity",
-        "anchor_profile",
-        "crawl_frontier",
-        "windowed_event_counts",
-        "tpch_pricing_summary",
-        "tpch_revenue_by_nation",
-        "bpe_vocab",
-        "bpe_segment",
-        "text_normalize",
-        "cdx_entries",
-        "jpeg_pixel_stats",
-        "mp3_duration_stats",
-        "h264_sps_dims",
-        "hll_distinct_tokens",
-        "cms_heavy_hitters",
-        "kmv_source_overlap",
-        "ann_pq_topk",
-        "events_asof_join",
-        "events_interval_join",
-        "pmi_bigrams",
-        "phrase_search",
-        "corpus_shuffle",
-        "link_hits",
-        "zorder_layout",
-        "suffix_array_ranks",
-        "jl_projection",
-        "exact_duplicate_spans",
-        "windowed_distinct_users",
-        "dedup_keep_best",
-        "event_funnel",
-        "script_mix",
-        "vocab_growth",
-        "dedup_ngram_containment",
-        "quantile_histogram",
-        "dedup_eval_recall",
-        "winnow_fingerprints",
-        "winnow_pairs",
-        "chunk_sliding",
-        "token_drift",
-        "key_skew_report",
-        "lm_ppl_adaptive",
-        "dedup_soft_weights",
-        "domain_mix_doremi",
-        "unimax_alloc",
-        "temperature_mix",
-        "quota_sample",
-        "ann_hard_negatives",
-        "ccnet_band_sample",
-        "dup_source_matrix",
-        "bpe_fertility",
-        "ann_lsh_multiprobe",
-        "pii_density",
-        "corpus_card",
-        "embedding_outliers",
-        "crawl_budget",
-        "lexical_diversity",
-        "compaction_plan",
-        "snapshot_triage",
-        "host_boilerplate",
-        "signal_correlation",
-        "domain_quality_prior",
-        "split_dedup_safe",
-        "weighted_sample",
-        "bitext_pairs",
-        "lsh_plan",
-        "char_entropy",
-        "url_features",
-        "quality_calibrate",
-        "reshard_plan",
-        "typosquat_hosts",
-        "classifier_calibration",
-        "encoding_damage",
-        "mojibake_repair",
-        "text_readability",
-        "filter_attrition",
-        "image_near_dup",
-        "audio_near_dup",
-        "multimodal_near_dup",
-        "semantic_decontam",
-        "pii_cc_luhn",
-        "image_dup_clusters",
-        "audio_dup_clusters",
-        "label_propagation",
-        "event_bursts",
-        "doc_self_dedup",
-        "url_variant_fold",
-        "curriculum_order",
-        "crawl_trap_hosts",
-        "extract_boilerplate",
-        "trustrank_hosts",
-        "html_tables",
-        "mime_sniff",
-        "redirect_resolve",
-        "feed_entries",
-        "canonical_meta",
-        "charset_report",
-        "html_outline",
-        "jsonld_inventory",
-        "hreflang_clusters",
-        "pagination_chains",
-        "rare_ngram_risk",
-        "license_optout",
-        "cc_large_star",
-        "cdc_chunk_dedup",
-        "url_dates",
-        "soft404_report",
-        "extract_prefilter",
-        "hll_shard_merge",
-        "dictionary_match",
-        "media_tags",
-        "lm_mixture_em",
-        "graph_2hop_sample",
-        "span_removal",
-        "webdataset_shards",
-        "webdataset_roundtrip",
-        # r5: the 33 queries the tail had never timed — with these the
-        # bench covers the full registry (1 trial each; walls
-        # to TRIALS.json like the rest of the tail)
-        "dedup_simhash64",
-        "dedup_embedding_cosine",
-        "media_metadata",
-        "media_frame_samples",
-        "user_sessions",
-        "training_corpus_select",
-        "resume_pending_buckets",
-        "tpch_region_part_revenue",
-        "docs_rollup_stats",
-        "extract_metrics",
-        "extract_length_histogram",
-        "readerable_pages",
-        "candidate_paths",
-        "tokenfinder_real_paths",
-        "domain_stats",
-        "text_token_stats",
-        "text_lang_id",
-        "length_quantiles",
-        "robots_filter",
-        "snapshot_diff",
-        "domain_top_k",
-        "corpus_sample",
-        "corpus_pack_binned",
-        "warc_ingest",
-        "pdf_extract_text",
-        "page_outlinks",
-        "host_link_graph",
-        "link_pagerank",
-        "sitemap_entries",
-        "sitemap_recrawl",
-        "refetch_schedule",
-        "dedup_incremental_new",
-        "dedup_exact_groups",
-        # r5-new operators
-        "jsonl_shards",
-        "jsonl_roundtrip",
-        "url_aligned_pairs",
-        "zipf_slope",
-    ):
-        fn = qmap[name]
-        if name in headline:
-            n_tr = TRIALS
-        elif name in plan_changed_this_round:
-            n_tr = 2
-        else:
-            n_tr = 1
+    for name, fn in qmap.items():
+        if name == "extract_articles":
+            continue  # timed above over the replicated corpus
+        n_tr = TRIALS if name in headline else 1
         queries[name] = timed(
             lambda fn=fn: fn(spark, SF_DIR).count(), name, trials=n_tr
         )

@@ -1841,15 +1841,31 @@ class Readability:
         }
 
 
+class NotReaderable(Exception):
+    """A page that failed the readerable prefilter of :func:`extract_article`."""
+
+
 def extract_article(
-    html: "str | bytes", url: Optional[str] = None, **options
+    html: "str | bytes",
+    url: Optional[str] = None,
+    readerable_prefilter: bool = False,
+    **options,
 ) -> Optional[dict]:
-    """Convenience one-shot: parse HTML bytes/str and run Readability."""
+    """Convenience one-shot: parse HTML bytes/str and run Readability.
+
+    ``readerable_prefilter`` runs isProbablyReaderable on the parsed DOM
+    first and raises :class:`NotReaderable` for a page that fails it,
+    before the grab and cleanup passes (one parse serves both)."""
     from readability_spark.dom.parser import decode_html_bytes
 
     if isinstance(html, (bytes, bytearray, memoryview)):
         html = decode_html_bytes(bytes(html))
     doc = parse_html(html, base_uri=url)
+    if readerable_prefilter:
+        from readability_spark.core.readerable import is_probably_readerable
+
+        if not is_probably_readerable(doc):
+            raise NotReaderable(url)
     reader = Readability(doc, **options)
     reader._source_html = html
     return reader.parse()

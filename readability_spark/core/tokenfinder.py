@@ -87,24 +87,6 @@ PERMITS_PHRASING = frozenset(
 # tokenizer (FuzzyCompare-equivalent: category runs over the text)
 # ---------------------------------------------------------------------------
 
-WS, WORD, NUMBER, PUNCT, SYMBOL, OTHER = range(6)
-
-
-def _char_class(ch: str) -> int:
-    if ch.isspace():
-        return WS
-    cat = unicodedata.category(ch)
-    c0 = cat[0]
-    if c0 == "L" or c0 == "M":
-        return WORD
-    if c0 == "N":
-        return NUMBER
-    if c0 == "P":
-        return PUNCT
-    if c0 == "S":
-        return SYMBOL
-    return OTHER
-
 
 def count_tokens(text: str) -> tuple:
     """(total, words, numbers, puncts). Alphanumeric runs form one token

@@ -28,7 +28,7 @@ Design notes
 from __future__ import annotations
 
 import re
-from typing import Callable, Iterable, Iterator, Optional
+from typing import Callable, Iterator, Optional
 
 _WS_RE = re.compile(r"\s+")
 
@@ -576,20 +576,3 @@ class Document(Element):
 
     def create_text_node(self, data: str) -> Text:
         return Text(data)
-
-
-def remove_nodes(
-    nodes: Iterable[Node], filter_fn: Optional[Callable[[Element], bool]] = None
-) -> None:
-    """Remove a snapshot of nodes in reverse order, skipping already-detached ones
-    (emulates the reference's reverse live-list removal)."""
-    for node in reversed(list(nodes)):
-        if node.parent is None:
-            continue
-        if filter_fn is None or (isinstance(node, Element) and filter_fn(node)):
-            node.remove()
-
-
-def replace_node_tags(nodes: Iterable[Element], new_tag: str) -> None:
-    for node in list(nodes):
-        node.set_tag(new_tag)

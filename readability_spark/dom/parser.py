@@ -560,24 +560,6 @@ def parse_html(source: "str | bytes", base_uri: Optional[str] = None) -> Documen
     return doc
 
 
-def parse_fragment(source: str) -> list:
-    """Parse a fragment; returns the list of top-level nodes (detached)."""
-    builder = _TreeBuilder()
-    builder.feed(source)
-    builder.close()
-    doc = builder.document
-    html = doc.document_element
-    roots = list((html or doc).children) if html is not None else list(doc.children)
-    out = []
-    for node in roots:
-        if isinstance(node, Element) and node.tag in ("head", "body"):
-            for sub in list(node.children):
-                out.append(sub.remove())
-        else:
-            out.append(node.remove())
-    return out
-
-
 def decode_html_bytes(raw: bytes) -> str:
     """Charset detection: BOM/UTF-8 strict → <meta charset> sniff → best-effort."""
     if raw.startswith(b"\xef\xbb\xbf"):

@@ -34,11 +34,6 @@ def build_parser() -> argparse.ArgumentParser:
         "(full-corpus shuffle; escape hatch for compute-skewed inputs). "
         "Default extracts on scan splits and shuffles only extracted rows.",
     )
-    p.add_argument(
-        "--no-salt",
-        action="store_true",
-        help=argparse.SUPPRESS,  # deprecated: post-extract alignment is now the default
-    )
     p.add_argument("--no-html", action="store_true", help="drop content_html from output")
     p.add_argument("--limit", type=int, default=0)
     p.add_argument(

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -38,6 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from readability_spark.operators.batches import arrow_map
 from readability_spark.operators.multimodal import build_wav
 
 AUDIO_STATS_SCHEMA = StructType(
@@ -110,23 +111,13 @@ def synthesize_audio(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def per_row(doc_id):
+        d = int(doc_id)
+        rate, n = synth_audio_params(d)
+        pcm = struct.pack(f"<{n}h", *(synth_sample(d, i) for i in range(n)))
+        return ((d, build_wav(rate, n, data=pcm)),)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"].to_numpy():
-                d = int(doc_id)
-                rate, n = synth_audio_params(d)
-                pcm = struct.pack(
-                    f"<{n}h", *(synth_sample(d, i) for i in range(n))
-                )
-                rows.append(
-                    {"doc_id": d, "payload": build_wav(rate, n, data=pcm)}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return docs.select("doc_id").mapInPandas(batches, out_schema)
+    return arrow_map(docs, ["doc_id"], per_row, out_schema)
 
 
 def resample_box_pcm16(samples, k: int):
@@ -166,40 +157,30 @@ def audio_resample(audio: DataFrame, target_rate: int = 8000) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    cols = out_schema.fieldNames()
 
-        cols = [f.name for f in out_schema.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(
-                pdf["doc_id"].to_numpy(), pdf["payload"].to_numpy()
-            ):
-                d = int(doc_id)
-                row = dict.fromkeys(cols)
-                row["doc_id"], row["ok"] = d, False
-                try:
-                    rate, samples = decode_wav_pcm16(
-                        bytes(payload) if payload is not None else b""
-                    )
-                    if rate % target_rate:
-                        raise ValueError("rate not an integer multiple")
-                    k = rate // target_rate
-                    out = resample_box_pcm16(samples, k)
-                    pcm = struct.pack(f"<{len(out)}h", *out)
-                    row.update(
-                        src_rate=rate,
-                        out_rate=target_rate,
-                        n_in=len(samples),
-                        payload=build_wav(target_rate, len(out), data=pcm),
-                        ok=True,
-                    )
-                except (ValueError, struct.error):
-                    pass
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
+    def per_row(doc_id, payload):
+        row = dict.fromkeys(cols)
+        row["doc_id"], row["ok"] = int(doc_id), False
+        try:
+            rate, samples = decode_wav_pcm16(bytes(payload) if payload is not None else b"")
+            if rate % target_rate:
+                raise ValueError("rate not an integer multiple")
+            k = rate // target_rate
+            out = resample_box_pcm16(samples, k)
+            pcm = struct.pack(f"<{len(out)}h", *out)
+            row.update(
+                src_rate=rate,
+                out_rate=target_rate,
+                n_in=len(samples),
+                payload=build_wav(target_rate, len(out), data=pcm),
+                ok=True,
+            )
+        except (ValueError, struct.error):
+            pass
+        return (row,)
 
-    return audio.mapInPandas(batches, out_schema)
+    return arrow_map(audio, ["doc_id", "payload"], per_row, out_schema)
 
 
 def audio_sample_stats(audio: DataFrame) -> DataFrame:
@@ -207,48 +188,39 @@ def audio_sample_stats(audio: DataFrame) -> DataFrame:
     n_samples, amp_mean, rms, peak, zero_crossings, ok). Malformed payloads
     yield ok=False rows."""
 
-    def batches(it: Iterator) -> Iterator:
-        import math
+    import math
 
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        cols = [f.name for f in AUDIO_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(
-                pdf["doc_id"].to_numpy(), pdf["payload"].to_numpy()
-            ):
-                d = int(doc_id)
-                row = dict.fromkeys(cols)
-                row["doc_id"], row["ok"] = d, False
-                try:
-                    rate, samples = decode_wav_pcm16(
-                        bytes(payload) if payload is not None else b""
-                    )
-                    arr = np.asarray(samples, dtype=np.int64)
-                    n = len(arr)
-                    if n == 0:
-                        # A structurally valid WAV with an empty data chunk
-                        # decodes fine but has no stats; keep the ok=False
-                        # isolation contract instead of dividing by zero.
-                        raise ValueError("empty data chunk")
-                    nonneg = arr >= 0
-                    row.update(
-                        sample_rate=rate,
-                        n_samples=n,
-                        amp_mean=float(arr.sum()) / n,
-                        rms=math.sqrt(float((arr * arr).sum()) / n),
-                        peak=int(np.abs(arr).max()),
-                        zero_crossings=int((nonneg[1:] != nonneg[:-1]).sum()),
-                        ok=True,
-                    )
-                except (ValueError, struct.error, zlib.error):
-                    pass
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
+    cols = AUDIO_STATS_SCHEMA.fieldNames()
 
-    return audio.mapInPandas(batches, AUDIO_STATS_SCHEMA)
+    def per_row(doc_id, payload):
+        row = dict.fromkeys(cols)
+        row["doc_id"], row["ok"] = int(doc_id), False
+        try:
+            rate, samples = decode_wav_pcm16(bytes(payload) if payload is not None else b"")
+            arr = np.asarray(samples, dtype=np.int64)
+            n = len(arr)
+            if n == 0:
+                # A structurally valid WAV with an empty data chunk decodes
+                # fine but has no stats; keep the ok=False isolation contract
+                # instead of dividing by zero.
+                raise ValueError("empty data chunk")
+            nonneg = arr >= 0
+            row.update(
+                sample_rate=rate,
+                n_samples=n,
+                amp_mean=float(arr.sum()) / n,
+                rms=math.sqrt(float((arr * arr).sum()) / n),
+                peak=int(np.abs(arr).max()),
+                zero_crossings=int((nonneg[1:] != nonneg[:-1]).sum()),
+                ok=True,
+            )
+        except (ValueError, struct.error, zlib.error):
+            pass
+        return (row,)
+
+    return arrow_map(audio, ["doc_id", "payload"], per_row, AUDIO_STATS_SCHEMA)
 
 
 AUDIO_FP_SCHEMA = StructType(
@@ -304,30 +276,20 @@ def audio_fingerprint(audio: DataFrame) -> DataFrame:
     execution contract as the decode/stats operators.
     """
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    cols = AUDIO_FP_SCHEMA.fieldNames()
 
-        cols = [f.name for f in AUDIO_FP_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(
-                pdf["doc_id"].to_numpy(), pdf["payload"].to_numpy()
-            ):
-                d = int(doc_id)
-                row = dict.fromkeys(cols)
-                row["doc_id"], row["ok"] = d, False
-                try:
-                    _rate, samples = decode_wav_pcm16(
-                        bytes(payload) if payload is not None else b""
-                    )
-                    hi, lo = fingerprint_pcm16(samples)
-                    row.update(fp_hi=hi, fp_lo=lo, ok=True)
-                except (ValueError, struct.error, zlib.error):
-                    pass
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
+    def per_row(doc_id, payload):
+        row = dict.fromkeys(cols)
+        row["doc_id"], row["ok"] = int(doc_id), False
+        try:
+            _rate, samples = decode_wav_pcm16(bytes(payload) if payload is not None else b"")
+            hi, lo = fingerprint_pcm16(samples)
+            row.update(fp_hi=hi, fp_lo=lo, ok=True)
+        except (ValueError, struct.error, zlib.error):
+            pass
+        return (row,)
 
-    return audio.mapInPandas(batches, AUDIO_FP_SCHEMA)
+    return arrow_map(audio, ["doc_id", "payload"], per_row, AUDIO_FP_SCHEMA)
 
 
 def audio_near_dup(

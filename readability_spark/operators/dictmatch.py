@@ -6,12 +6,10 @@ vocabularies, brand/entity gazetteers) the alternation blows up the
 regex engine, while Aho–Corasick (1975) matches ALL patterns in one
 O(text + hits) scan regardless of dictionary size.
 
-Spark shape: the automaton is built ONCE per executor from the pattern
-list captured in the mapInPandas closure (broadcast with the serialized
-function — patterns are small; the automaton is built worker-side so
-only the strings ship), then each Arrow batch streams through it. Zero
-shuffles; one map-side-combined agg if the caller rolls up. Per-doc
-failure isolation as usual.
+Spark shape: the automaton is built ONCE on the driver and ships inside the
+per-row closure (serialized with the function), then each Arrow batch
+streams through it. Zero shuffles; one map-side-combined agg if the caller
+rolls up. Per-doc failure isolation as usual.
 
 Counting semantics: every (pattern, end-position) match counts — for
 border-free patterns (no proper prefix == suffix) this equals the
@@ -21,7 +19,7 @@ length-difference arithmetic.
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -30,6 +28,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from readability_spark.operators.batches import arrow_map
 
 MATCH_SCHEMA = StructType(
     [
@@ -91,28 +91,15 @@ def dictionary_match(
 ) -> DataFrame:
     """documents → (doc_id, n_hits, n_patterns): total dictionary hits and
     distinct patterns present per doc, one Aho–Corasick pass per doc."""
-    pats = list(patterns)
+    patterns = list(patterns)
+    n_patterns = len(patterns)
+    goto, fail, out = build_automaton(patterns)
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def per_row(did, text):
+        try:
+            counts = _scan(text or "", goto, fail, out, n_patterns)
+        except Exception:  # noqa: BLE001 — per-doc isolation
+            counts = [0] * n_patterns
+        return ((did, sum(counts), sum(1 for c in counts if c)),)
 
-        goto, fail, out = build_automaton(pats)
-        names = [f.name for f in MATCH_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for did, text in zip(pdf["doc_id"].to_numpy(), pdf["text"].to_numpy()):
-                try:
-                    counts = _scan(text or "", goto, fail, out, len(pats))
-                except Exception:  # noqa: BLE001 — per-doc isolation
-                    counts = [0] * len(pats)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_hits": sum(counts),
-                        "n_patterns": sum(1 for c in counts if c),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=names)
-
-    pruned = docs.select("doc_id", docs[text_col].alias("text"))
-    return pruned.mapInPandas(batches, MATCH_SCHEMA)
+    return arrow_map(docs, ["doc_id", text_col], per_row, MATCH_SCHEMA)

@@ -1,4 +1,4 @@
-"""The extraction operator: vectorized Arrow ``mapInPandas`` over html bytes.
+"""The extraction operator: vectorized Arrow batches over html bytes.
 
 Spark-first design (SURVEY.md §1.4/§3.4):
 
@@ -15,9 +15,10 @@ Spark-first design (SURVEY.md §1.4/§3.4):
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     IntegerType,
@@ -25,6 +26,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from readability_spark.operators.batches import arrow_map
 
 ARTICLE_SCHEMA = StructType(
     [
@@ -56,7 +59,7 @@ def _extract_one(url: Optional[str], html, options: dict, include_html: bool) ->
     cannot stage around an opaque UDF, so the staging lives inside it).
     """
     # imports resolved once per worker via module import, cheap here
-    from readability_spark.core.readability import Readability, extract_article
+    from readability_spark.core.readability import NotReaderable, extract_article
     from readability_spark.core.text import canonical_text
 
     row = {k.name: None for k in ARTICLE_SCHEMA.fields}
@@ -66,25 +69,7 @@ def _extract_one(url: Optional[str], html, options: dict, include_html: bool) ->
         if html is None:
             row["err"] = "null html"
             return row
-        if options.get("readerable_prefilter"):
-            from readability_spark.core.readerable import is_probably_readerable
-            from readability_spark.dom.parser import decode_html_bytes, parse_html
-
-            html_s = (
-                decode_html_bytes(bytes(html))
-                if isinstance(html, (bytes, bytearray, memoryview))
-                else html
-            )
-            doc = parse_html(html_s, base_uri=url)
-            if not is_probably_readerable(doc):
-                row["err"] = "not_readerable"
-                return row
-            opts = {k: v for k, v in options.items() if k != "readerable_prefilter"}
-            reader = Readability(doc, **opts)
-            reader._source_html = html_s
-            art = reader.parse()
-        else:
-            art = extract_article(html, url=url, **options)
+        art = extract_article(html, url=url, **options)
         if art is None:
             row["err"] = "no article found"
             return row
@@ -100,55 +85,22 @@ def _extract_one(url: Optional[str], html, options: dict, include_html: bool) ->
         row["site_name"] = art["siteName"]
         row["published"] = art["publishedTime"]
         row["length"] = len(row["text"])
+    except NotReaderable:
+        row["err"] = "not_readerable"
     except Exception as exc:  # noqa: BLE001 — per-row failure isolation
         row["ok"] = False
         row["err"] = f"{type(exc).__name__}: {exc}"[:1000]
     return row
 
 
-def make_extract_batches(
-    options: Optional[dict] = None, include_html: bool = True, html_bytes: bool = False
-):
-    """Build the mapInPandas function (options captured in the closure,
-    broadcast implicitly with the serialized function). The one per-batch
-    extraction loop: ``extract`` and the job path
-    (``plans.pipeline.observed_extract``) both run it. ``html_bytes=True``
-    appends each page's input size to its row (``ARTICLE_SCHEMA`` plus a
-    long ``html_bytes`` column)."""
+def extract_options(options: Optional[dict], include_html: bool) -> dict:
+    """The options every document of one extraction runs with."""
     options = dict(options or {})
     if not include_html:
         # text-only output: skip building the content-HTML string inside
         # parse() (canonical_text reads the article DOM directly)
         options.setdefault("serialize_content", False)
-    names = [f.name for f in ARTICLE_SCHEMA.fields] + (["html_bytes"] if html_bytes else [])
-
-    def extract_batches(batches: Iterator) -> Iterator:
-        import gc
-
-        import pandas as pd
-
-        from readability_spark.operators.workergc import tune_worker_gc
-
-        # see workergc: delayed young-gen scans over the per-doc DOM storm,
-        # plus one explicit collect per Arrow batch to bound the floating
-        # cyclic garbage the delay accumulates
-        tune_worker_gc()
-
-        for pdf in batches:
-            # numpy iteration: pandas Series.__iter__ boxes per element
-            urls = pdf["url"].to_numpy() if "url" in pdf.columns else [None] * len(pdf)
-            htmls = pdf["html"].to_numpy()
-            rows = [
-                _extract_one(u, h, options, include_html)
-                for u, h in zip(urls, htmls)
-            ]
-            if html_bytes:
-                for row, h in zip(rows, htmls):
-                    row["html_bytes"] = len(h) if h is not None else 0
-            gc.collect()
-            yield pd.DataFrame(rows, columns=names)
-
-    return extract_batches
+    return options
 
 
 def extract(
@@ -158,12 +110,18 @@ def extract(
 ) -> DataFrame:
     """url+html DataFrame → article DataFrame (ARTICLE_SCHEMA).
 
-    Column pruning: only (url, html) are shipped to Python — select them
-    explicitly so the parquet scan reads just those columns.
+    Column pruning: only (url, html) are shipped to Python, so the parquet
+    scan reads just those columns. A frame without a url column extracts
+    with a null url.
     """
-    cols = [c for c in ("url", "html") if c in df.columns]
-    return df.select(*cols).mapInPandas(
-        make_extract_batches(options, include_html), ARTICLE_SCHEMA
+    options = extract_options(options, include_html)
+    if "url" not in df.columns:
+        df = df.withColumn("url", F.lit(None).cast("string"))
+    return arrow_map(
+        df,
+        ["url", "html"],
+        lambda u, h: (_extract_one(u, h, options, include_html),),
+        ARTICLE_SCHEMA,
     )
 
 
@@ -190,31 +148,16 @@ def extract_debug(df: DataFrame, k: int = 5) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator) -> Iterator:
-        import gc
-
-        import pandas as pd
-
+    def per_row(u, h):
         from readability_spark.core.candidates import top_candidates
-        from readability_spark.operators.workergc import tune_worker_gc
 
-        tune_worker_gc()
+        try:
+            ranked = top_candidates(h, url=u, k=k)
+        except Exception:
+            ranked = []
+        return ((u, ranked),)
 
-        for pdf in it:
-            out = []
-            # numpy iteration, like the main extract path: Series.__iter__
-            # boxes per element
-            for u, h in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-                try:
-                    ranked = top_candidates(h, url=u, k=k)
-                except Exception:
-                    ranked = []
-                out.append({"url": u, "top_candidates": ranked})
-            gc.collect()
-            yield pd.DataFrame(out, columns=["url", "top_candidates"])
-
-    cols = [c for c in ("url", "html") if c in df.columns]
-    return df.select(*cols).mapInPandas(batches, schema)
+    return arrow_map(df, ["url", "html"], per_row, schema)
 
 
 def extract_token_paths(df: DataFrame) -> DataFrame:
@@ -229,64 +172,36 @@ def extract_token_paths(df: DataFrame) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator) -> Iterator:
-        import gc
-
-        import pandas as pd
-
+    def per_row(u, h):
         from readability_spark.core.tokenfinder import find_article_path
-        from readability_spark.operators.workergc import tune_worker_gc
 
-        tune_worker_gc()
+        try:
+            path = find_article_path(h)
+        except Exception:
+            path = None
+        return ((u, path),)
 
-        for pdf in it:
-            out = []
-            for u, h in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-                try:
-                    path = find_article_path(h)
-                except Exception:
-                    path = None
-                out.append({"url": u, "top_path": path})
-            gc.collect()
-            yield pd.DataFrame(out, columns=["url", "top_path"])
-
-    cols = [c for c in ("url", "html") if c in df.columns]
-    return df.select(*cols).mapInPandas(batches, schema)
+    return arrow_map(df, ["url", "html"], per_row, schema)
 
 
 def readerable(df: DataFrame) -> DataFrame:
     """Cheap pre-filter column: url + readerable boolean
     (isProbablyReaderable; pipeline staging per SURVEY.md §4)."""
-    from pyspark.sql.types import BooleanType as _B
-
     schema = StructType(
         [
             StructField("url", StringType(), True),
-            StructField("readerable", _B(), False),
+            StructField("readerable", BooleanType(), False),
         ]
     )
 
-    def batches(it: Iterator) -> Iterator:
-        import gc
-
-        import pandas as pd
-
+    def per_row(u, h):
         from readability_spark.core.readerable import is_probably_readerable
         from readability_spark.dom.parser import parse_html
-        from readability_spark.operators.workergc import tune_worker_gc
 
-        tune_worker_gc()
+        try:
+            ok = is_probably_readerable(parse_html(h))
+        except Exception:
+            ok = False
+        return ((u, ok),)
 
-        for pdf in it:
-            out = []
-            for u, h in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-                try:
-                    ok = is_probably_readerable(parse_html(h))
-                except Exception:
-                    ok = False
-                out.append({"url": u, "readerable": ok})
-            gc.collect()
-            yield pd.DataFrame(out, columns=["url", "readerable"])
-
-    cols = [c for c in ("url", "html") if c in df.columns]
-    return df.select(*cols).mapInPandas(batches, schema)
+    return arrow_map(df, ["url", "html"], per_row, schema)

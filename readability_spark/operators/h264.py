@@ -34,7 +34,7 @@ never enter a shuffle (same contract as jpeg.py / mp3.py).
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+from typing import Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from readability_spark.operators.batches import arrow_map
 
 # profile_idc values that carry the chroma-format/bit-depth branch
 # (ITU-T H.264 §7.3.2.1.1).
@@ -283,8 +285,6 @@ def synth_sps_params(doc_id: int) -> Tuple[int, int, int, int, int, int, int]:
 
 def synthesize_sps(docs: DataFrame) -> DataFrame:
     """(doc_id) -> (doc_id, content): a real Annex-B SPS NAL per doc."""
-    import pandas as pd
-
     out_schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -292,23 +292,17 @@ def synthesize_sps(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator) -> Iterator:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mw, mh, prof, lvl, cr, cb, poc = synth_sps_params(d)
-                rows.append((d, build_sps(mw, mh, prof, lvl, cr, cb, poc)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def per_row(doc_id):
+        d = int(doc_id)
+        mw, mh, prof, lvl, cr, cb, poc = synth_sps_params(d)
+        return ((d, build_sps(mw, mh, prof, lvl, cr, cb, poc)),)
 
-    return docs.select("doc_id").mapInPandas(batches, schema=out_schema)
+    return arrow_map(docs, ["doc_id"], per_row, out_schema)
 
 
 def h264_sps_dims(video: DataFrame) -> DataFrame:
     """Parse the binary SPS column and emit the stream's true decode
     parameters; malformed payloads isolate to ok=False rows."""
-    import pandas as pd
-
     out_schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -321,27 +315,17 @@ def h264_sps_dims(video: DataFrame) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator) -> Iterator:
-        for pdf in it:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                d = int(doc_id)
-                try:
-                    m = parse_sps(bytes(content))
-                    rows.append(
-                        (
-                            d, m["profile_idc"], m["level_idc"],
-                            m["width"], m["height"], m["n_mbs"], True,
-                        )
-                    )
-                except ValueError:
-                    rows.append((d, None, None, None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "profile_idc", "level_idc",
-                    "width", "height", "n_mbs", "ok",
-                ],
+    def per_row(doc_id, content):
+        d = int(doc_id)
+        try:
+            m = parse_sps(bytes(content))
+            return (
+                (
+                    d, m["profile_idc"], m["level_idc"],
+                    m["width"], m["height"], m["n_mbs"], True,
+                ),
             )
+        except ValueError:
+            return ((d, None, None, None, None, None, False),)
 
-    return video.mapInPandas(batches, schema=out_schema)
+    return arrow_map(video, ["doc_id", "content"], per_row, out_schema)

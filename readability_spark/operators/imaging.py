@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator, Tuple
+from typing import Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -54,6 +54,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from readability_spark.operators.batches import arrow_map
 from readability_spark.operators.multimodal import _PNG_SIG
 
 PIXEL_STATS_SCHEMA = StructType(
@@ -215,21 +216,13 @@ def synthesize_images(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def per_row(doc_id):
+        d = int(doc_id)
+        w, h = synth_dims(d)
+        px = [bytes(synth_pixel(d, x, y) for x in range(w)) for y in range(h)]
+        return ((d, build_png_gray(w, h, px)),)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"].to_numpy():
-                d = int(doc_id)
-                w, h = synth_dims(d)
-                px = [
-                    bytes(synth_pixel(d, x, y) for x in range(w)) for y in range(h)
-                ]
-                rows.append({"doc_id": d, "payload": build_png_gray(w, h, px)})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return docs.select("doc_id").mapInPandas(batches, out_schema)
+    return arrow_map(docs, ["doc_id"], per_row, out_schema)
 
 
 RESIZE_SCHEMA = StructType(
@@ -281,37 +274,28 @@ def image_resize(images: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame
     data in flight — at 100 TB of originals the output is the only thing
     downstream stages ever shuffle."""
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        cols = [f.name for f in RESIZE_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(
-                pdf["doc_id"].to_numpy(), pdf["payload"].to_numpy()
-            ):
-                d = int(doc_id)
-                row = dict.fromkeys(cols)
-                row["doc_id"], row["ok"] = d, False
-                try:
-                    w, h, px = decode_png_gray(
-                        bytes(payload) if payload is not None else b""
-                    )
-                    arr = np.frombuffer(bytes(px), dtype=np.uint8).reshape(h, w)
-                    out_rows = resize_box_gray(arr, w, h, out_w, out_h)
-                    row.update(
-                        src_w=w,
-                        src_h=h,
-                        payload=build_png_gray(out_w, out_h, out_rows),
-                        ok=True,
-                    )
-                except (ValueError, zlib.error, struct.error):
-                    pass
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
+    cols = RESIZE_SCHEMA.fieldNames()
 
-    return images.mapInPandas(batches, RESIZE_SCHEMA)
+    def per_row(doc_id, payload):
+        row = dict.fromkeys(cols)
+        row["doc_id"], row["ok"] = int(doc_id), False
+        try:
+            w, h, px = decode_png_gray(bytes(payload) if payload is not None else b"")
+            arr = np.frombuffer(bytes(px), dtype=np.uint8).reshape(h, w)
+            out_rows = resize_box_gray(arr, w, h, out_w, out_h)
+            row.update(
+                src_w=w,
+                src_h=h,
+                payload=build_png_gray(out_w, out_h, out_rows),
+                ok=True,
+            )
+        except (ValueError, zlib.error, struct.error):
+            pass
+        return (row,)
+
+    return arrow_map(images, ["doc_id", "payload"], per_row, RESIZE_SCHEMA)
 
 
 def _ahash(px, w: int, h: int) -> Tuple[int, int]:
@@ -340,42 +324,33 @@ def image_pixel_stats(images: DataFrame) -> DataFrame:
     px_mean, px_min, px_max, ahash_hi, ahash_lo, ok). Malformed payloads
     yield ok=False rows (same failure-isolation contract as extraction)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(
-                pdf["doc_id"].to_numpy(), pdf["payload"].to_numpy()
-            ):
-                d = int(doc_id)
-                row = dict.fromkeys(cols)
-                row["doc_id"], row["ok"] = d, False
-                try:
-                    w, h, px = decode_png_gray(
-                        bytes(payload) if payload is not None else b""
-                    )
-                    arr = np.frombuffer(bytes(px), dtype=np.uint8).reshape(h, w)
-                    hi, lo = _ahash(arr, w, h)
-                    row.update(
-                        width=w,
-                        height=h,
-                        n_px=w * h,
-                        px_mean=float(arr.sum()) / (w * h),
-                        px_min=int(arr.min()),
-                        px_max=int(arr.max()),
-                        ahash_hi=hi,
-                        ahash_lo=lo,
-                        ok=True,
-                    )
-                except (ValueError, zlib.error, struct.error):
-                    pass
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
+    cols = PIXEL_STATS_SCHEMA.fieldNames()
 
-    return images.mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    def per_row(doc_id, payload):
+        row = dict.fromkeys(cols)
+        row["doc_id"], row["ok"] = int(doc_id), False
+        try:
+            w, h, px = decode_png_gray(bytes(payload) if payload is not None else b"")
+            arr = np.frombuffer(bytes(px), dtype=np.uint8).reshape(h, w)
+            hi, lo = _ahash(arr, w, h)
+            row.update(
+                width=w,
+                height=h,
+                n_px=w * h,
+                px_mean=float(arr.sum()) / (w * h),
+                px_min=int(arr.min()),
+                px_max=int(arr.max()),
+                ahash_hi=hi,
+                ahash_lo=lo,
+                ok=True,
+            )
+        except (ValueError, zlib.error, struct.error):
+            pass
+        return (row,)
+
+    return arrow_map(images, ["doc_id", "payload"], per_row, PIXEL_STATS_SCHEMA)
 
 
 def image_near_dup(

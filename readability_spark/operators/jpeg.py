@@ -42,7 +42,7 @@ the PNG/WAV/extraction UDF shape; image bytes never enter a shuffle.
 from __future__ import annotations
 
 from struct import error as struct_error
-from typing import Iterator, Tuple
+from typing import Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -55,6 +55,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from readability_spark.operators.batches import arrow_map
 
 # --------------------------------------------------------------------------
 # spec constants (ITU-T T.81 Annex K)
@@ -510,8 +512,6 @@ def synth_jpeg_dims(doc_id: int) -> Tuple[int, int]:
 def synthesize_jpegs(docs: DataFrame) -> DataFrame:
     """(doc_id) -> (doc_id, content): real baseline JPEG bytes of the
     constant-block image, written by the real encoder."""
-    import pandas as pd
-
     out_schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -519,55 +519,34 @@ def synthesize_jpegs(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator) -> Iterator:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = synth_jpeg_dims(d)
-                px = np.empty((h, w), dtype=np.uint8)
-                for by in range(h // 8):
-                    for bx in range(w // 8):
-                        px[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                            synth_block_value(d, bx, by)
-                        )
-                rows.append((d, encode_jpeg_gray(px)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def per_row(doc_id):
+        d = int(doc_id)
+        w, h = synth_jpeg_dims(d)
+        px = np.empty((h, w), dtype=np.uint8)
+        for by in range(h // 8):
+            for bx in range(w // 8):
+                px[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = synth_block_value(d, bx, by)
+        return ((d, encode_jpeg_gray(px)),)
 
-    return docs.select("doc_id").mapInPandas(batches, schema=out_schema)
+    return arrow_map(docs, ["doc_id"], per_row, out_schema)
 
 
 def jpeg_pixel_stats(images: DataFrame) -> DataFrame:
     """Decode the binary JPEG column (real Huffman + IDCT path) and emit
     exact pixel statistics; malformed payloads isolate to ok=False rows."""
-    import pandas as pd
 
-    def batches(it: Iterator) -> Iterator:
-        for pdf in it:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                d = int(doc_id)
-                try:
-                    w, h, px = decode_jpeg(bytes(content))
-                    n = w * h
-                    if n == 0:
-                        raise ValueError("jpeg: empty image")
-                    arr = px.astype(np.int64)
-                    rows.append(
-                        (
-                            d, w, h, n,
-                            float(arr.sum()) / n,
-                            int(arr.min()), int(arr.max()), True,
-                        )
-                    )
-                except (ValueError, IndexError, struct_error):
-                    rows.append((d, None, None, None, None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_px",
-                    "px_mean", "px_min", "px_max", "ok",
-                ],
+    def per_row(doc_id, content):
+        d = int(doc_id)
+        try:
+            w, h, px = decode_jpeg(bytes(content))
+            n = w * h
+            if n == 0:
+                raise ValueError("jpeg: empty image")
+            arr = px.astype(np.int64)
+            return (
+                (d, w, h, n, float(arr.sum()) / n, int(arr.min()), int(arr.max()), True),
             )
+        except (ValueError, IndexError, struct_error):
+            return ((d, None, None, None, None, None, None, False),)
 
-    return images.mapInPandas(batches, schema=JPEG_STATS_SCHEMA)
+    return arrow_map(images, ["doc_id", "content"], per_row, JPEG_STATS_SCHEMA)

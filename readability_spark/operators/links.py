@@ -5,7 +5,7 @@ drive frontier expansion, host graphs drive crawl prioritization and spam
 domain detection, and PageRank-style scores weight corpus sampling.
 
 - :func:`extract_outlinks` rides the same DOM machinery as article
-  extraction (one parse per page inside ``mapInPandas``), resolving hrefs
+  extraction (one parse per page inside an Arrow batch map), resolving hrefs
   against the document's base URL exactly the way the reference resolves
   relative URIs (``core/urls.DocumentUrl`` — honoring ``<base href>``, cf.
   reference DocumentUrl.cs:16-42). Fragments-only, javascript: and data:
@@ -22,11 +22,11 @@ host-pair count, not page count. PageRank over the result lives in
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
+
+from readability_spark.operators.batches import arrow_map
 
 OUTLINK_SCHEMA = StructType(
     [
@@ -67,18 +67,10 @@ def outlinks_of_html(url: str, html) -> list:
 def extract_outlinks(df: DataFrame) -> DataFrame:
     """(url, html) pages → one row per outlink (url, href, anchor)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def per_row(u, h):
+        return [(u, href, anchor) for href, anchor in outlinks_of_html(u, h)]
 
-        for pdf in it:
-            rows = []
-            for u, h in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-                for href, anchor in outlinks_of_html(u, h):
-                    rows.append({"url": u, "href": href, "anchor": anchor})
-            yield pd.DataFrame(rows, columns=["url", "href", "anchor"])
-
-    cols = [c for c in ("url", "html") if c in df.columns]
-    return df.select(*cols).mapInPandas(batches, OUTLINK_SCHEMA)
+    return arrow_map(df, ["url", "html"], per_row, OUTLINK_SCHEMA)
 
 
 def host_graph(links: DataFrame, url_col: str = "url", href_col: str = "href") -> DataFrame:

@@ -32,7 +32,7 @@ never enter a shuffle (same contract as jpeg.py / imaging.py).
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+from typing import Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from readability_spark.operators.batches import arrow_map
 
 # ISO/IEC 11172-3 Table B.2: MPEG-1 Layer III bitrates (kbps) by 4-bit
 # index; 0 = free format, 15 = forbidden (both rejected by the walker).
@@ -167,8 +169,6 @@ def synth_mp3_params(doc_id: int) -> Tuple[int, int, int, int]:
 def synthesize_mp3s(docs: DataFrame) -> DataFrame:
     """(doc_id) -> (doc_id, content): real MP3 stream bytes per doc; the
     padding phase is doc_id % 2 so adjacent frames differ in length."""
-    import pandas as pd
-
     out_schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -176,16 +176,12 @@ def synthesize_mp3s(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator) -> Iterator:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n, br_idx, sr_idx, id3 = synth_mp3_params(d)
-                rows.append((d, build_mp3(n, br_idx, sr_idx, id3, d % 2)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def per_row(doc_id):
+        d = int(doc_id)
+        n, br_idx, sr_idx, id3 = synth_mp3_params(d)
+        return ((d, build_mp3(n, br_idx, sr_idx, id3, d % 2)),)
 
-    return docs.select("doc_id").mapInPandas(batches, schema=out_schema)
+    return arrow_map(docs, ["doc_id"], per_row, out_schema)
 
 
 def mp3_duration_stats(audio: DataFrame) -> DataFrame:
@@ -193,8 +189,6 @@ def mp3_duration_stats(audio: DataFrame) -> DataFrame:
     payloads isolate to ok=False rows. byte_len is part of the contract:
     it equals the input length only if the walker consumed every frame
     (including per-frame padding bytes) exactly."""
-    import pandas as pd
-
     out_schema = StructType(
         [
             StructField("doc_id", LongType(), True),
@@ -207,28 +201,18 @@ def mp3_duration_stats(audio: DataFrame) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator) -> Iterator:
-        for pdf in it:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                d = int(doc_id)
-                raw = bytes(content)
-                try:
-                    m = parse_mp3(raw)
-                    rows.append(
-                        (
-                            d, m["n_frames"], m["bitrate_kbps"],
-                            m["sample_rate"], m["duration_us"], len(raw), True,
-                        )
-                    )
-                except ValueError:
-                    rows.append((d, None, None, None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "bitrate_kbps",
-                    "sample_rate", "duration_us", "byte_len", "ok",
-                ],
+    def per_row(doc_id, content):
+        d = int(doc_id)
+        raw = bytes(content)
+        try:
+            m = parse_mp3(raw)
+            return (
+                (
+                    d, m["n_frames"], m["bitrate_kbps"],
+                    m["sample_rate"], m["duration_us"], len(raw), True,
+                ),
             )
+        except ValueError:
+            return ((d, None, None, None, None, None, False),)
 
-    return audio.mapInPandas(batches, schema=out_schema)
+    return arrow_map(audio, ["doc_id", "content"], per_row, out_schema)

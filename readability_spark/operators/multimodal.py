@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from readability_spark.operators.batches import arrow_map
 
 MEDIA_META_SCHEMA = StructType(
     [
@@ -320,24 +322,18 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def per_row(doc_id):
+        d = int(doc_id)
+        mt, w, h, rate, n_samp, n_frames = _media_params(d)
+        if mt == "image/png":
+            payload = build_png(w, h)
+        elif mt == "audio/wav":
+            payload = build_wav(rate, n_samp)
+        else:
+            payload = build_mp4(n_frames)
+        return ((d, mt, payload),)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mt, w, h, rate, n_samp, n_frames = _media_params(d)
-                if mt == "image/png":
-                    payload = build_png(w, h)
-                elif mt == "audio/wav":
-                    payload = build_wav(rate, n_samp)
-                else:
-                    payload = build_mp4(n_frames)
-                rows.append({"doc_id": d, "media_type": mt, "payload": payload})
-            yield pd.DataFrame(rows, columns=["doc_id", "media_type", "payload"])
-
-    return docs.select("doc_id").mapInPandas(batches, out_schema)
+    return arrow_map(docs, ["doc_id"], per_row, out_schema)
 
 
 def sample_frames(meta: DataFrame, every_n: int = 5) -> DataFrame:
@@ -361,46 +357,39 @@ def extract_media_metadata(media: DataFrame) -> DataFrame:
     payloads produce ok=False rows instead of failing the job (same
     failure-isolation contract as html extraction)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def per_row(doc_id, mt, payload):
+        raw = bytes(payload) if payload is not None else b""
+        row = {
+            "doc_id": int(doc_id),
+            "media_type": mt,
+            "byte_len": len(raw),
+            "width": None,
+            "height": None,
+            "sample_rate": None,
+            "n_samples": None,
+            "duration_us": None,
+            "n_frames": None,
+            "ok": True,
+        }
+        try:
+            if mt == "image/png":
+                meta = parse_png(raw)
+                row["width"], row["height"] = meta["width"], meta["height"]
+                row["n_frames"] = 1
+            elif mt == "audio/wav":
+                meta = parse_wav(raw)
+                row["sample_rate"] = meta["sample_rate"]
+                row["n_samples"] = meta["n_samples"]
+                row["duration_us"] = meta["duration_us"]
+                row["n_frames"] = 1
+            elif mt == "video/mp4":
+                meta = parse_mp4(raw)
+                row["n_frames"] = meta["n_frames"]
+                row["duration_us"] = meta["duration_us"]
+            else:
+                row["ok"] = False
+        except (ValueError, struct.error, ZeroDivisionError, OverflowError):
+            row["ok"] = False
+        return (row,)
 
-        cols = [f.name for f in MEDIA_META_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, mt, payload in zip(pdf["doc_id"], pdf["media_type"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                row = {
-                    "doc_id": int(doc_id),
-                    "media_type": mt,
-                    "byte_len": len(raw),
-                    "width": None,
-                    "height": None,
-                    "sample_rate": None,
-                    "n_samples": None,
-                    "duration_us": None,
-                    "n_frames": None,
-                    "ok": True,
-                }
-                try:
-                    if mt == "image/png":
-                        meta = parse_png(raw)
-                        row["width"], row["height"] = meta["width"], meta["height"]
-                        row["n_frames"] = 1
-                    elif mt == "audio/wav":
-                        meta = parse_wav(raw)
-                        row["sample_rate"] = meta["sample_rate"]
-                        row["n_samples"] = meta["n_samples"]
-                        row["duration_us"] = meta["duration_us"]
-                        row["n_frames"] = 1
-                    elif mt == "video/mp4":
-                        meta = parse_mp4(raw)
-                        row["n_frames"] = meta["n_frames"]
-                        row["duration_us"] = meta["duration_us"]
-                    else:
-                        row["ok"] = False
-                except (ValueError, struct.error, ZeroDivisionError, OverflowError):
-                    row["ok"] = False
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(batches, MEDIA_META_SCHEMA)
+    return arrow_map(media, ["doc_id", "media_type", "payload"], per_row, MEDIA_META_SCHEMA)

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator, List, Optional, Sequence, Tuple
+from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -46,6 +46,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from readability_spark.operators.batches import arrow_map
 
 PDF_TEXT_SCHEMA = StructType(
     [
@@ -308,26 +310,16 @@ def synthesize_pdfs(docs: DataFrame) -> DataFrame:
     layout is a deterministic, SQL-replicable function of (doc_id, text):
     a parenthesized header line (exercises string escaping), then the text
     split at column 80 (exercises multi-line T*)."""
-    import pandas as pd
-
     from pyspark.sql.types import BinaryType
 
     schema = StructType(
         [StructField("doc_id", LongType(), True), StructField("pdf", BinaryType(), True)]
     )
 
-    def batches(it: Iterator) -> Iterator:
-        for pdf_batch in it:
-            rows = []
-            for doc_id, text in zip(
-                pdf_batch["doc_id"].to_numpy(), pdf_batch["text"].to_numpy()
-            ):
-                rows.append(
-                    {"doc_id": int(doc_id), "pdf": build_pdf([doc_lines(doc_id, text)])}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "pdf"])
+    def per_row(doc_id, text):
+        return ((int(doc_id), build_pdf([doc_lines(doc_id, text)])),)
 
-    return docs.select("doc_id", "text").mapInPandas(batches, schema)
+    return arrow_map(docs, ["doc_id", "text"], per_row, schema)
 
 
 def doc_lines(doc_id: int, text: str) -> List[str]:
@@ -345,31 +337,22 @@ def pdf_extract(df: DataFrame, content_col: str = "pdf") -> DataFrame:
     """(doc_id, pdf) → PDF_TEXT_SCHEMA. Same contract as the html extract
     operator: per-doc failure isolation, Arrow batches, no shuffle."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def per_row(doc_id, blob):
+        row = {
+            "doc_id": int(doc_id),
+            "n_pages": None,
+            "text": None,
+            "n_bytes": None,
+            "ok": False,
+            "err": None,
+        }
+        try:
+            data = bytes(blob)
+            row["n_bytes"] = len(data)
+            n_pages, text = extract_pdf_text(data)
+            row.update(n_pages=n_pages, text=text, ok=True)
+        except Exception as exc:  # noqa: BLE001 — per-doc isolation
+            row["err"] = f"{type(exc).__name__}: {exc}"[:500]
+        return (row,)
 
-        cols = [f.name for f in PDF_TEXT_SCHEMA.fields]
-        for pdf_batch in it:
-            rows = []
-            for doc_id, blob in zip(
-                pdf_batch["doc_id"].to_numpy(), pdf_batch[content_col].to_numpy()
-            ):
-                row = {
-                    "doc_id": int(doc_id),
-                    "n_pages": None,
-                    "text": None,
-                    "n_bytes": None,
-                    "ok": False,
-                    "err": None,
-                }
-                try:
-                    data = bytes(blob)
-                    row["n_bytes"] = len(data)
-                    n_pages, text = extract_pdf_text(data)
-                    row.update(n_pages=n_pages, text=text, ok=True)
-                except Exception as exc:  # noqa: BLE001 — per-doc isolation
-                    row["err"] = f"{type(exc).__name__}: {exc}"[:500]
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select("doc_id", content_col).mapInPandas(batches, PDF_TEXT_SCHEMA)
+    return arrow_map(df, ["doc_id", content_col], per_row, PDF_TEXT_SCHEMA)

@@ -57,7 +57,7 @@ def seeded_planes(
 
 
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings scan. Deliberately NOT fanned out like _docs_p: the
+    """Embeddings scan. Deliberately NOT fanned out like the registry's _docs: the
     per-row work in every ANN pipeline is codegen arithmetic (plane dots,
     subvector L2), microseconds per row — at test scale the walls are
     stage-count overhead, and a pinned repartition measurably ADDS time
@@ -231,23 +231,6 @@ def int8_cosine_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "vec_id", "cosine_q8")
-    )
-
-
-def lsh_bucket(emb: DataFrame, planes: DataFrame) -> DataFrame:
-    """Sign-bit bucket id per vector against broadcast hyperplanes
-    (``planes``: (plane_id, p_emb) from :func:`seeded_planes`)."""
-    return (
-        emb.join(F.broadcast(planes))
-        .select(
-            "vec_id",
-            "plane_id",
-            F.when(_dot(F.col("embedding"), F.col("p_emb")) >= 0, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("bit"),
-        )
-        .groupBy("vec_id")
-        .agg(F.sum(F.col("bit") * F.pow(F.lit(2.0), F.col("plane_id")).cast("long")).alias("bucket"))
     )
 
 

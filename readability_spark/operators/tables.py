@@ -12,13 +12,13 @@ DOM rather than inside the extraction cleanup pass.
 
 Spark-first shape (same contract as operators/extract.py):
 
-- one ``mapInPandas`` over (url, html) Arrow batches — the DOM parse and
+- one Arrow batch map over (url, html) (``operators.batches``) — the DOM parse and
   the table walk happen inside the Python worker, nothing tree-shaped
   crosses the JVM boundary; output rows are flat scalars;
 - per-document failure isolation: a malformed page yields zero table rows,
   never a task failure;
 - pure function of html bytes — deterministic under repartitioning and
-  retries, so the plan is a single narrow stage (scan → mapInPandas); any
+  retries, so the plan is a single narrow stage (scan → Python map); any
   downstream groupBy (e.g. data-table share per host) is the only shuffle.
 
 At 100 TB this runs as a side-channel of the same scan the extraction job
@@ -29,7 +29,7 @@ oracle-checkable.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from readability_spark.operators.batches import arrow_map
 
 TABLE_SCHEMA = StructType(
     [
@@ -137,23 +139,7 @@ def _tables_one(url: Optional[str], html) -> list:
 def table_stats(df: DataFrame, url_col: str = "url", html_col: str = "html") -> DataFrame:
     """(url, html) → one row per <table> with structure stats and the
     reference IsDataTable verdict (TABLE_SCHEMA)."""
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        names = [f.name for f in TABLE_SCHEMA.fields]
-        for pdf in it:
-            urls = pdf["url"].to_numpy()
-            htmls = pdf["html"].to_numpy()
-            rows: list = []
-            for u, h in zip(urls, htmls):
-                rows.extend(_tables_one(u, h))
-            yield pd.DataFrame(rows, columns=names)
-
-    pruned = df.select(
-        df[url_col].alias("url"), df[html_col].alias("html")
-    )
-    return pruned.mapInPandas(batches, TABLE_SCHEMA)
+    return arrow_map(df, [url_col, html_col], _tables_one, TABLE_SCHEMA)
 
 
 # -- heading outline: the second DOM-walk side channel ---------------------
@@ -177,12 +163,12 @@ OUTLINE_SCHEMA = StructType(
 _H_TAGS = ("h1", "h2", "h3", "h4", "h5", "h6")
 
 
-def _outline_one(url, html) -> Optional[dict]:
+def _outline_one(url, html) -> list:
     from readability_spark.dom.parser import decode_html_bytes, parse_html
 
     try:
         if html is None:
-            return None
+            return []
         html_s = (
             decode_html_bytes(bytes(html))
             if isinstance(html, (bytes, bytearray, memoryview))
@@ -200,36 +186,24 @@ def _outline_one(url, html) -> Optional[dict]:
         skips = any(
             lvl > 1 and counts[lvl - 2] == 0 for lvl in used
         )
-        return {
-            "url": url,
-            **{f"n_h{i + 1}": counts[i] for i in range(6)},
-            "n_headings": sum(counts),
-            "max_level": max(used) if used else None,
-            "first_h1": first_h1,
-            "skips_levels": skips,
-        }
+        return [
+            {
+                "url": url,
+                **{f"n_h{i + 1}": counts[i] for i in range(6)},
+                "n_headings": sum(counts),
+                "max_level": max(used) if used else None,
+                "first_h1": first_h1,
+                "skips_levels": skips,
+            }
+        ]
     except Exception:  # noqa: BLE001 — per-document failure isolation
-        return None
+        return []
 
 
 def heading_outline(df: DataFrame, url_col: str = "url", html_col: str = "html") -> DataFrame:
     """(url, html) → one outline row per document: per-level heading
     counts, deepest level, first <h1> text, and whether the outline skips
     levels (an h3 under no h2 — the accessibility/structure smell that
-    correlates with templated/spammy pages). Same mapInPandas contract as
+    correlates with templated/spammy pages). Same batch contract as
     :func:`table_stats`; in production both ride the extraction parse."""
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        names = [f.name for f in OUTLINE_SCHEMA.fields]
-        for pdf in it:
-            rows = [
-                r
-                for u, h in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy())
-                if (r := _outline_one(u, h)) is not None
-            ]
-            yield pd.DataFrame(rows, columns=names)
-
-    pruned = df.select(df[url_col].alias("url"), df[html_col].alias("html"))
-    return pruned.mapInPandas(batches, OUTLINE_SCHEMA)
+    return arrow_map(df, [url_col, html_col], _outline_one, OUTLINE_SCHEMA)

@@ -135,7 +135,12 @@ def observed_extract(
     Returns (result_df, observation); observation.get is available after the
     first action on result_df.
     """
-    from readability_spark.operators.extract import ARTICLE_SCHEMA, make_extract_batches
+    from readability_spark.operators.batches import arrow_map
+    from readability_spark.operators.extract import (
+        ARTICLE_SCHEMA,
+        _extract_one,
+        extract_options,
+    )
     from pyspark.sql.types import LongType, StructField, StructType
 
     if salt:
@@ -143,9 +148,14 @@ def observed_extract(
 
     # keep html size through the UDF boundary for the boilerplate metric
     schema = StructType(ARTICLE_SCHEMA.fields + [StructField("html_bytes", LongType(), True)])
-    result = pages.select("url", "html").mapInPandas(
-        make_extract_batches(options, include_html, html_bytes=True), schema
-    )
+    options = extract_options(options, include_html)
+
+    def per_row(url, html):
+        row = _extract_one(url, html, options, include_html)
+        row["html_bytes"] = len(html) if html is not None else 0
+        return (row,)
+
+    result = arrow_map(pages, ["url", "html"], per_row, schema)
     result = with_bucket(result, n_buckets)
     if not salt:
         # the bucket-partitioned write needs alignment, or every task

@@ -20,7 +20,7 @@ Scale shape (same discipline as the tar sink)
 * Writing happens INSIDE the shard task (temp file + atomic rename —
   the task-commit shape Spark's own sinks use); bytes never route
   through the driver.
-* Parsing back is a shuffle-free ``mapInPandas`` projection.
+* Parsing back is a shuffle-free Arrow batch projection.
 
 Determinism as a correctness lever: lines are sorted by doc_id, the
 JSON serialization is pinned (fixed key order doc_id/lang/source/text,
@@ -43,11 +43,12 @@ import gzip
 import io
 import json
 import os
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from readability_spark.operators.batches import arrow_map
 from readability_spark.sources.webdataset import shard_assign
 
 MANIFEST_SCHEMA = (
@@ -166,26 +167,11 @@ def build_jsonl_blobs(docs: DataFrame, n_shards: int = 8) -> DataFrame:
 
 def parse_jsonl(shards: DataFrame, gz_col: str = "gz") -> DataFrame:
     """(shard_id, doc_id, lang, source, text) back out of gzip-JSONL shard
-    blobs — shuffle-free mapInPandas; the source side of the sink."""
-    import pandas as pd
+    blobs — a shuffle-free Arrow batch map; the source side of the sink."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for sid, blob in zip(pdf["shard_id"], pdf[gz_col]):
-                for line in gzip.decompress(bytes(blob)).splitlines():
-                    obj = json.loads(line)
-                    rows.append(
-                        {
-                            "shard_id": int(sid),
-                            "doc_id": int(obj["doc_id"]),
-                            "lang": obj["lang"],
-                            "source": obj["source"],
-                            "text": obj["text"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["shard_id", "doc_id", "lang", "source", "text"]
-            )
+    def per_row(sid, blob):
+        for line in gzip.decompress(bytes(blob)).splitlines():
+            obj = json.loads(line)
+            yield (int(sid), int(obj["doc_id"]), obj["lang"], obj["source"], obj["text"])
 
-    return shards.select("shard_id", gz_col).mapInPandas(batches, SAMPLE_SCHEMA)
+    return arrow_map(shards, ["shard_id", gz_col], per_row, StructType.fromDDL(SAMPLE_SCHEMA))

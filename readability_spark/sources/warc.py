@@ -17,7 +17,7 @@ This module provides both directions, fully distributed:
   bytes are reproducible. ``applyInPandas`` per file group; every field is a
   deterministic function of ``doc_id`` so the DuckDB oracle can verify the
   full write → parse round trip byte-exactly (md5 of the recovered html).
-- :func:`parse_warc_files` — ``mapInPandas`` over ``(warc_file, content)``
+- :func:`parse_warc_files` — an Arrow batch map over ``(warc_file, content)``
   blobs: walk gzip members (``zlib.decompressobj`` + ``unused_data``),
   parse each record's headers, extract HTTP status/headers/body from
   ``response`` records, and emit the input-hint row shape
@@ -26,7 +26,7 @@ This module provides both directions, fully distributed:
   ``ok=false`` row — one corrupt record never fails a task (same failure
   contract as the extraction UDF).
 
-Scale shape: parsing is a pure ``mapInPandas`` projection — no shuffle; at
+Scale shape: parsing is a pure Arrow batch projection — no shuffle; at
 cluster scale the blob column comes from ``spark.read.format("binaryFile")``
 over the WARC bucket (or an Iceberg table of (path, content)), and
 parallelism is one task per file, the natural unit because gzip members
@@ -41,7 +41,7 @@ from __future__ import annotations
 import gzip
 import zlib
 from datetime import datetime
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +55,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from readability_spark.operators.batches import arrow_map
 
 WARC_DATE_FMT = "%Y-%m-%dT%H:%M:%SZ"
 
@@ -258,84 +260,49 @@ def parse_http_response(payload: bytes):
 def parse_warc_files(df: DataFrame, content_col: str = "content") -> DataFrame:
     """(warc_file, content) blobs → WARC_RECORD_SCHEMA response rows.
 
-    Pure mapInPandas — no shuffle; only (warc_file, content) are shipped to
+    Pure Arrow batch map — no shuffle; only (warc_file, content) are shipped to
     Python. A blob that fails mid-walk emits one ok=false row carrying the
     error; records already yielded from it are kept (restart-friendly:
     downstream exact dedup absorbs replays)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def failed(name, url, exc) -> dict:
+        return {
+            "warc_file": name,
+            "url": url,
+            "warc_ts": None,
+            "status": None,
+            "content_type": None,
+            "html": None,
+            "n_bytes": None,
+            "ok": False,
+            "err": f"{type(exc).__name__}: {exc}"[:500],
+        }
 
-        cols = [f.name for f in WARC_RECORD_SCHEMA.fields]
-
-        def finish(rows):
-            out = pd.DataFrame(rows, columns=cols)
-            out["warc_ts"] = pd.to_datetime(out["warc_ts"], format=WARC_DATE_FMT)
-            return out
-
-        for pdf in it:
-            rows = []
-            for name, blob in zip(
-                pdf["warc_file"].to_numpy(), pdf[content_col].to_numpy()
-            ):
+    def per_row(name, blob):
+        try:
+            for headers, payload in iter_warc_records(bytes(blob)):
+                if headers.get("warc-type") != "response":
+                    continue
+                url = headers.get("warc-target-uri")
                 try:
-                    for headers, payload in iter_warc_records(bytes(blob)):
-                        if headers.get("warc-type") != "response":
-                            continue
-                        try:
-                            status, ctype, body = parse_http_response(payload)
-                            rows.append(
-                                {
-                                    "warc_file": name,
-                                    "url": headers.get("warc-target-uri"),
-                                    "warc_ts": headers.get("warc-date"),
-                                    "status": status,
-                                    "content_type": ctype,
-                                    "html": body,
-                                    "n_bytes": len(body),
-                                    "ok": True,
-                                    "err": None,
-                                }
-                            )
-                        except Exception as exc:  # noqa: BLE001 — record isolation
-                            rows.append(
-                                {
-                                    "warc_file": name,
-                                    "url": headers.get("warc-target-uri"),
-                                    "warc_ts": None,
-                                    "status": None,
-                                    "content_type": None,
-                                    "html": None,
-                                    "n_bytes": None,
-                                    "ok": False,
-                                    "err": f"{type(exc).__name__}: {exc}"[:500],
-                                }
-                            )
-                except Exception as exc:  # noqa: BLE001 — blob isolation
-                    rows.append(
-                        {
-                            "warc_file": name,
-                            "url": None,
-                            "warc_ts": None,
-                            "status": None,
-                            "content_type": None,
-                            "html": None,
-                            "n_bytes": None,
-                            "ok": False,
-                            "err": f"{type(exc).__name__}: {exc}"[:500],
-                        }
-                    )
-            yield finish(rows)
+                    status, ctype, body = parse_http_response(payload)
+                    date = headers.get("warc-date")
+                    yield {
+                        "warc_file": name,
+                        "url": url,
+                        "warc_ts": None
+                        if date is None
+                        else datetime.strptime(date, WARC_DATE_FMT),
+                        "status": status,
+                        "content_type": ctype,
+                        "html": body,
+                        "n_bytes": len(body),
+                        "ok": True,
+                        "err": None,
+                    }
+                except Exception as exc:  # noqa: BLE001 — record isolation
+                    yield failed(name, url, exc)
+        except Exception as exc:  # noqa: BLE001 — blob isolation
+            yield failed(name, None, exc)
 
-    return df.select("warc_file", content_col).mapInPandas(batches, WARC_RECORD_SCHEMA)
-
-
-def read_warc_directory(spark: SparkSession, path: str) -> DataFrame:
-    """Cluster-shape entry point: a directory of .warc.gz files → response
-    rows, via Spark's binaryFile source (one task per file; predicate
-    pushdown on path/modificationTime applies at the file index level)."""
-    files = spark.read.format("binaryFile").load(path).select(
-        F.element_at(F.split(F.col("path"), "/"), -1).alias("warc_file"),
-        F.col("content"),
-    )
-    return parse_warc_files(files)
+    return arrow_map(df, ["warc_file", content_col], per_row, WARC_RECORD_SCHEMA)

@@ -21,7 +21,7 @@ Scale shape
 * Writing happens INSIDE the shard task (write-to-temp + atomic rename,
   the same task-commit shape Spark's own file sinks use) — shard bytes
   never route through the driver.
-* Parsing back is a shuffle-free ``mapInPandas`` projection.
+* Parsing back is a shuffle-free Arrow batch projection.
 
 Determinism as a correctness lever: members are sorted by key and every
 tar header field is pinned (mtime=0, uid/gid=0, empty uname/gname,
@@ -39,10 +39,12 @@ from __future__ import annotations
 import io
 import os
 import tarfile
-from typing import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from readability_spark.operators.batches import arrow_map
 
 # one manifest row per non-empty shard
 MANIFEST_SCHEMA = (
@@ -141,26 +143,15 @@ def write_webdataset(docs: DataFrame, out_dir: str, n_shards: int = 8) -> DataFr
 
 def parse_webdataset(shards: DataFrame, tar_col: str = "tar") -> DataFrame:
     """(shard_id, doc_id, text) back out of shard archives — shuffle-free
-    mapInPandas over (shard_id, tar) rows; the source side of the sink."""
-    import pandas as pd
+    Arrow batch map over (shard_id, tar) rows; the source side of the sink."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows = []
-            for sid, blob in zip(pdf["shard_id"], pdf[tar_col]):
-                with tarfile.open(fileobj=io.BytesIO(bytes(blob)), mode="r:") as tf:
-                    for member in tf.getmembers():
-                        data = tf.extractfile(member).read()
-                        rows.append(
-                            {
-                                "shard_id": int(sid),
-                                "doc_id": int(member.name.split(".")[0]),
-                                "text": data.decode("utf-8"),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=["shard_id", "doc_id", "text"])
+    def per_row(sid, blob):
+        with tarfile.open(fileobj=io.BytesIO(bytes(blob)), mode="r:") as tf:
+            for member in tf.getmembers():
+                data = tf.extractfile(member).read()
+                yield (int(sid), int(member.name.split(".")[0]), data.decode("utf-8"))
 
-    return shards.select("shard_id", tar_col).mapInPandas(batches, SAMPLE_SCHEMA)
+    return arrow_map(shards, ["shard_id", tar_col], per_row, StructType.fromDDL(SAMPLE_SCHEMA))
 
 
 def build_webdataset_blobs(docs: DataFrame, n_shards: int = 8) -> DataFrame:

@@ -122,13 +122,18 @@ def main() -> int:
         with_injected_duplicates,
     )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    # two fifths of physical memory: the Python workers live outside the JVM heap
+    driver_mem = os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM",
+        f"{os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') * 2 // 5 >> 30}g",
+    )
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("cardinality-sweep")
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

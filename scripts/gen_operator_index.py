@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Generate docs/OPERATORS.md — the auditable index of every registry query:
-which readability_spark modules implement it, whether it has a DuckDB
-oracle, and whether bench.py times it. Regenerate after registry changes:
+which readability_spark modules implement it and whether it has a DuckDB
+oracle. Regenerate after registry changes:
 
     python scripts/gen_operator_index.py
 """
@@ -20,18 +20,19 @@ HEADER = """# Operator index (auto-generated — scripts/gen_operator_index.py)
 One row per `queries()` entry in `__spark_entry__.py`. *Oracle* = exact
 DuckDB SQL mirror compared by the driver and by
 `tests/test_oracle_parity.py` / `scripts/verify_queries.py` (row count,
-column set, order-insensitive value hash). *Bench* = timed by `bench.py`
+column set, order-insensitive value hash). `bench.py` times every entry
 at sf0.1 (walls in `BENCH/TRIALS.json`). The first line of each query's
 docstring describes what it computes; scale analyses live in
 `docs/SCALE.md` and `BENCH/CARDINALITY.md`.
 
-Shared-worker note: `operators/workergc.py` raises the Python GC
-thresholds process-wide in reused PySpark workers (gen0 700 → 200k) and
-never restores them. Every allocation-heavy Arrow batch function that
-shares those workers must therefore `gc.collect()` once per batch (the
-extraction/codec operators do) — a new batch operator that skips the
-per-batch collect runs under the delayed-collection regime and can hold
-floating cyclic garbage for the worker's lifetime.
+Shared-worker note: every per-row Arrow operator (extraction and its DOM
+side channels, the media codecs, the shard and WARC readers) runs through
+`operators/batches.arrow_map`. The runner raises the Python GC thresholds
+process-wide in reused PySpark workers (gen0 700 → 200k, never restored)
+and runs one `gc.collect()` per Arrow batch, so floating cyclic garbage is
+bounded by one batch. A new per-row operator gets both by using the runner;
+a hand-written `mapInPandas` loop would run under the raised thresholds
+without the per-batch collect.
 """
 
 
@@ -40,14 +41,9 @@ def main() -> int:
 
     q = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    bench_src = open(os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "bench.py")).read()
-    m = re.search(r"for name in \((.*?)\):\n        fn = qmap", bench_src, re.S)
-    benched = set(re.findall(r'"([a-z0-9_]+)"', m.group(1))) | {"extract_articles"}
-
     lines = [HEADER]
-    lines.append("| # | query | modules | oracle | bench | summary |")
-    lines.append("|---|---|---|---|---|---|")
+    lines.append("| # | query | modules | oracle | summary |")
+    lines.append("|---|---|---|---|---|")
     for i, (name, fn) in enumerate(q.items(), 1):
         try:
             src = inspect.getsource(fn)
@@ -85,21 +81,18 @@ def main() -> int:
         doc = doc[: cut + 1] if 0 <= cut < 160 else doc[:160]
         doc = doc.replace("|", "\\|") or "—"
         oracle = "✓" if name in oracles else "rows-only"
-        b = "✓" if name in benched else "—"
-        lines.append(f"| {i} | `{name}` | {mod_s} | {oracle} | {b} | {doc} |")
+        lines.append(f"| {i} | `{name}` | {mod_s} | {oracle} | {doc} |")
 
     n_oracle = sum(1 for n in q if n in oracles)
-    n_bench = sum(1 for n in q if n in benched)
     lines.append("")
     lines.append(
-        f"**Totals: {len(q)} queries, {n_oracle} with exact oracles, "
-        f"{n_bench} benched.**"
+        f"**Totals: {len(q)} queries, {n_oracle} with exact oracles.**"
     )
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                        "docs", "OPERATORS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
-    print(f"wrote {out}: {len(q)} queries, {n_oracle} oracles, {n_bench} benched")
+    print(f"wrote {out}: {len(q)} queries, {n_oracle} oracles")
     return 0
 
 

@@ -1,7 +1,8 @@
-"""Spark-level integration tests: the golden corpus through mapInPandas,
+"""Spark-level integration tests: the golden corpus through the Arrow batch runner,
 checkpoint/resume, metrics, streaming parity, and determinism under
 partitioning."""
 
+import datetime as dt
 import os
 
 import pytest
@@ -12,11 +13,31 @@ from readability_spark.sources import fixtures
 pytestmark = pytest.mark.spark
 
 
+# crawl pages standing in for the reference corpus where it is absent
+N_CRAWL_PAGES = 64
+
+
+def _crawl_rows() -> list:
+    from tests.crawl_goldens import corpus
+
+    crawl = [(url, html) for pid, url, html in corpus() if pid.startswith("crawl:")]
+    return [
+        {
+            "url": url,
+            "warc_ts": fixtures.EPOCH + dt.timedelta(seconds=i),
+            "html": html,
+            "text": None,
+            "lang": None,
+        }
+        for i, (url, html) in enumerate(crawl[:N_CRAWL_PAGES])
+    ]
+
+
 @pytest.fixture(scope="module")
 def fixture_pages(spark):
-    rows = list(fixtures.input_rows())
-    if not rows:
-        pytest.skip("reference fixture corpus not present")
+    """The reference corpus as a page table, or the first crawl pages of
+    the on-box goldens corpus without it."""
+    rows = list(fixtures.input_rows()) or _crawl_rows()
     return spark.createDataFrame(
         [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"]) for r in rows],
         "url string, warc_ts timestamp, html binary, text string, lang string",
@@ -25,6 +46,10 @@ def fixture_pages(spark):
 
 @pytest.fixture(scope="module")
 def expected_texts(spark):
+    """Reference-only: the on-box counterpart is the template goldens
+    through Spark (tests/test_goldens_crawl.py)."""
+    if not fixtures.fixture_names():
+        pytest.skip("reference fixture corpus not present")
     rows = [
         (f"http://fakehost/test/{name}/page.html", fixtures.expected_text(fixtures.load_case(name)))
         for name in fixtures.fixture_names()
