@@ -1,8 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the CPUs this
-process may run on), driver memory $SPARK_GRAFT_DRIVER_MEM (default: two
-fifths of physical memory).
+/root/testdata/sf0.1) on the local session of readability_spark/session.py
+(local[$SPARK_GRAFT_CPUS], driver memory $SPARK_GRAFT_DRIVER_MEM).
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -19,29 +18,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from readability_spark.session import build_spark, local_cpus
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
-# two fifths of physical memory: the Python workers live outside the JVM heap
-DRIVER_MEM = os.environ.get(
-    "SPARK_GRAFT_DRIVER_MEM",
-    f"{os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') * 2 // 5 >> 30}g",
-)
-
-
-def build_spark(cpus: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("readability-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", DRIVER_MEM)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+CPUS = local_cpus()
 
 
 TRIALS = int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "3"))
@@ -66,8 +46,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from pyspark.sql import functions as F
 
-    spark = build_spark(CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_spark("readability-spark-bench")
 
     from readability_spark.operators.extract import extract
     from readability_spark.plans.pipeline import (
@@ -138,55 +117,13 @@ def main() -> int:
         release_persistent_rdds(spark)
         gc.collect()
 
-    # -- per-stage candidate cardinalities for the banded dedup pipelines:
-    # candidate volume relative to corpus size is what predicts behavior at
-    # 100x (a near-linear count here stays near-linear; quadratic explodes).
-    # Opt-in (SPARK_GRAFT_BENCH_CARDINALITIES=1): the sweep's counts cost
-    # real wall time the round driver should spend on verification instead;
-    # the standing record lives in BENCH/CARDINALITY.md (scripts/
-    # cardinality_sweep.py regenerates it).
-    cardinalities: dict = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_CARDINALITIES", "0") == "1":
-        from readability_spark.operators.dedup import (
-            minhash_lsh_pairs,
-            ngram_jaccard_pairs,
-            simhash64_near_pairs,
-            with_injected_duplicates,
-        )
-
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        dup = with_injected_duplicates(docs).persist()
-        cardinalities["dedup_input_docs"] = dup.count()
-        st: dict = {}
-        result_n = minhash_lsh_pairs(dup, _stages=st).count()
-        cardinalities["minhash"] = {
-            "band_rows": st["band_rows"].count(),
-            "candidate_pairs": st["candidate_pairs"].count(),
-            "verified_pairs": result_n,
-        }
-        st = {}
-        result_n = simhash64_near_pairs(dup, _stages=st).count()
-        cardinalities["simhash64"] = {
-            "candidate_pairs": st["candidate_pairs"].count(),
-            "verified_pairs": result_n,
-        }
-        st = {}
-        result_n = ngram_jaccard_pairs(dup, _stages=st).count()
-        cardinalities["ngram_jaccard"] = {
-            "shingle_rows": st["shingle_rows"].count(),
-            "discriminative_shingle_rows": st["discriminative_shingle_rows"].count(),
-            "candidate_pairs": st["candidate_pairs"].count(),
-            "verified_pairs": result_n,
-        }
-        dup.unpersist()
-
     total = round(sum(queries.values()), 3)
     # The final stdout line IS the contract, and the consumer tail-captures a
     # 2000-char buffer (measured: BENCH_r02's 927-char line parsed; r3's
     # longer line came back `parsed: null`, and even a compact dict of all
     # ~110 per-query walls is ~2.9 KB). So the LINE carries only the
     # extraction headline + the round-over-round perf-tracked query set;
-    # every benched wall, per-trial arrays, and cardinalities go to
+    # every benched wall and the per-trial arrays go to
     # BENCH/TRIALS.json.
     line_queries = {
         k: v for k, v in queries.items() if k == "extract_articles" or k in headline
@@ -206,7 +143,7 @@ def main() -> int:
         "n_queries_benched": len(queries),
         "all_walls": "BENCH/TRIALS.json",
     }
-    detail = dict(result, queries=queries, query_trials=ALL_TRIALS, cardinalities=cardinalities)
+    detail = dict(result, queries=queries, query_trials=ALL_TRIALS)
     try:
         # Diagnostic/smoke runs at other SFs set SPARK_GRAFT_TRIALS_PATH so
         # they don't clobber the committed round-artifact per-trial record.

@@ -1,16 +1,19 @@
-"""Oracle-parity comparator shared by scripts/verify_queries.py and
+"""Oracle-parity check shared by scripts/verify_queries.py and
 tests/test_oracle_parity.py.
 
 Mirrors the round driver's correctness gate: run a ``queries()`` entry on
 Spark and its ``oracle_sql()`` text on DuckDB over the same parquet dir,
 then compare row count, column-name set, and order-insensitive normalized
 cell values (columns sorted by name before hashing, floats rounded so
-Spark double math and DuckDB decimal math agree).
+Spark double math and DuckDB decimal math agree). Two empty results are a
+mismatch: they agree on nothing.
 """
 
 from __future__ import annotations
 
 import math
+import time
+from typing import NamedTuple
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -46,6 +49,8 @@ def register_oracle_views(con, sf_dir: str) -> None:
 def compare_result(scols, srows, ocols, orows) -> list[str]:
     """Return a list of mismatch messages; empty list == parity."""
     msgs: list[str] = []
+    if not srows and not orows:
+        msgs.append("both results are empty")
     if len(srows) != len(orows):
         msgs.append(f"rowcount {len(srows)} vs {len(orows)}")
     low_o = sorted(c.lower() for c in ocols)
@@ -64,3 +69,40 @@ def compare_result(scols, srows, ocols, orows) -> list[str]:
             f"spark-only={extra_s} oracle-only={extra_o}"
         )
     return msgs
+
+
+class Parity(NamedTuple):
+    rows: int
+    msgs: list[str]  # empty == parity
+    spark_s: float
+    oracle_s: float
+
+
+def check_parity(spark, con, sf_dir: str, builder, sql: str) -> Parity:
+    """Collect ``builder(spark, sf_dir)``, run ``sql`` on ``con`` (views from
+    :func:`register_oracle_views`) and compare the two results."""
+    t0 = time.monotonic()
+    sdf = builder(spark, sf_dir)
+    scols = sdf.columns
+    srows = [tuple(r) for r in sdf.collect()]
+    t1 = time.monotonic()
+    res = con.execute(sql)
+    ocols = [d[0] for d in res.description]
+    orows = res.fetchall()
+    t2 = time.monotonic()
+    return Parity(len(srows), compare_result(scols, srows, ocols, orows), t1 - t0, t2 - t1)
+
+
+def skip_reason(name: str) -> str | None:
+    """Why query ``name`` cannot be checked on this machine, or None.
+
+    ``tokenfinder_real_paths`` runs over the reference checkout's pages;
+    without them both sides are empty and the check would compare nothing.
+    """
+    if name != "tokenfinder_real_paths":
+        return None
+    import __spark_entry__ as entrymod
+
+    if entrymod._tokenfinder_real_corpus():
+        return None
+    return "no reference pages: the real-page token-finder corpus is empty"

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Second-decade dedup cardinality sweep: 55,000-doc dup-injected table.
 
-bench.py records per-stage candidate counts at the sf0.01 -> sf0.1 decade
-(550 -> 5,500 dup-injected docs). This script adds the next decade: a
+With reps = 1 this records per-stage candidate counts for the sf dir as
+it is (550 dup-injected docs at sf0.01, 5,500 at sf0.1: the first decade).
+With reps > 1 it adds the next decade: a
 deterministic 10x expansion of the sf0.1 corpus (5,500 -> 55,000 docs) so
 the minhash-linear / banded-quadratic-knee claims in BENCH/CARDINALITY.md
 rest on two decades of measurement instead of one.
@@ -113,31 +114,15 @@ def expanded_docs(spark, sf_dir: str, reps: int):
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     from readability_spark.operators.dedup import (
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
         simhash64_near_pairs,
         with_injected_duplicates,
     )
+    from readability_spark.session import build_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
-    # two fifths of physical memory: the Python workers live outside the JVM heap
-    driver_mem = os.environ.get(
-        "SPARK_GRAFT_DRIVER_MEM",
-        f"{os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') * 2 // 5 >> 30}g",
-    )
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("cardinality-sweep")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", driver_mem)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_spark("cardinality-sweep")
 
     expanded = expanded_docs(spark, SF_DIR, REPS)
     dup = with_injected_duplicates(expanded).persist()

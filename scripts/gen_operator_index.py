@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Generate docs/OPERATORS.md — the auditable index of every registry query:
-which readability_spark modules implement it and whether it has a DuckDB
-oracle. Regenerate after registry changes:
+"""Generate docs/OPERATORS.md — the auditable index of every registry query
+and the readability_spark modules that implement it. Regenerate after
+registry changes:
 
     python scripts/gen_operator_index.py
 """
@@ -17,13 +17,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEADER = """# Operator index (auto-generated — scripts/gen_operator_index.py)
 
-One row per `queries()` entry in `__spark_entry__.py`. *Oracle* = exact
-DuckDB SQL mirror compared by the driver and by
-`tests/test_oracle_parity.py` / `scripts/verify_queries.py` (row count,
-column set, order-insensitive value hash). `bench.py` times every entry
-at sf0.1 (walls in `BENCH/TRIALS.json`). The first line of each query's
-docstring describes what it computes; scale analyses live in
-`docs/SCALE.md` and `BENCH/CARDINALITY.md`.
+One row per `queries()` entry in `__spark_entry__.py`. Each query is
+declared once, as a `_REGISTRY` row holding its Spark builder and its
+exact DuckDB oracle; the driver, `tests/test_oracle_parity.py` and
+`scripts/verify_queries.py` compare the two (row count, column set,
+order-insensitive value hash, and an empty result fails). `bench.py`
+times every entry at sf0.1 (walls in `BENCH/TRIALS.json`). The first line
+of each query's docstring describes what it computes; scale analyses live
+in `docs/SCALE.md` and `BENCH/CARDINALITY.md`.
 
 Shared-worker note: every per-row Arrow operator (extraction and its DOM
 side channels, the media codecs, the shard and WARC readers) runs through
@@ -40,10 +41,9 @@ def main() -> int:
     import __spark_entry__ as entrymod
 
     q = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     lines = [HEADER]
-    lines.append("| # | query | modules | oracle | summary |")
-    lines.append("|---|---|---|---|---|")
+    lines.append("| # | query | modules | summary |")
+    lines.append("|---|---|---|---|")
     for i, (name, fn) in enumerate(q.items(), 1):
         try:
             src = inspect.getsource(fn)
@@ -80,19 +80,15 @@ def main() -> int:
         cut = doc.find(". ")
         doc = doc[: cut + 1] if 0 <= cut < 160 else doc[:160]
         doc = doc.replace("|", "\\|") or "—"
-        oracle = "✓" if name in oracles else "rows-only"
-        lines.append(f"| {i} | `{name}` | {mod_s} | {oracle} | {doc} |")
+        lines.append(f"| {i} | `{name}` | {mod_s} | {doc} |")
 
-    n_oracle = sum(1 for n in q if n in oracles)
     lines.append("")
-    lines.append(
-        f"**Totals: {len(q)} queries, {n_oracle} with exact oracles.**"
-    )
+    lines.append(f"**Totals: {len(q)} queries, each with an exact DuckDB oracle.**")
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                        "docs", "OPERATORS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
-    print(f"wrote {out}: {len(q)} queries, {n_oracle} oracles")
+    print(f"wrote {out}: {len(q)} queries")
     return 0
 
 

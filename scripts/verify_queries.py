@@ -1,19 +1,21 @@
 #!/usr/bin/env python
 """Local stand-in for the driver's correctness gate: run each queries() entry
 on Spark and its oracle_sql() on DuckDB over the same sf dir; compare row
-count, column set, and order-insensitive values."""
+count, column set, and order-insensitive values.
+
+Usage: python scripts/verify_queries.py [sf] [name ...]   (sf default 0.01)
+The session is readability_spark/session.py's, sized from the machine."""
 
 from __future__ import annotations
 
 import gc
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from readability_spark.plans.pipeline import release_persistent_rdds
-from readability_spark.testing import compare_result, register_oracle_views
+from readability_spark.testing import check_parity, register_oracle_views, skip_reason
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "0.01"
 # names may be space- or comma-separated; a bare "--only" flag is tolerated
@@ -30,17 +32,9 @@ def main():
     import duckdb
 
     import __spark_entry__ as entrymod
-    from pyspark.sql import SparkSession
+    from readability_spark.session import build_spark
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "12g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_spark("verify-queries")
 
     con = duckdb.connect()
     register_oracle_views(con, SF_DIR)
@@ -59,41 +53,26 @@ def main():
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
-        t0 = time.monotonic()
+        reason = skip_reason(name)
+        if reason:
+            print(f"- {name}: skipped ({reason})")
+            continue
         try:
-            sdf = fn(spark, SF_DIR)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            res = check_parity(spark, con, SF_DIR, fn, oracles[name])
         except Exception as e:
-            print(f"✗ {name}: SPARK ERROR {type(e).__name__}: {e}")
+            print(f"✗ {name}: ERROR {type(e).__name__}: {e}")
             failures += 1
             continue
-        t_spark = time.monotonic() - t0
-        if name not in oracles:
-            print(f"~ {name}: rows-only ({len(srows)} rows, no oracle)")
-            continue
-        t1 = time.monotonic()
-        try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
-        except Exception as e:
-            print(f"✗ {name}: ORACLE ERROR {type(e).__name__}: {e}")
-            failures += 1
-            continue
-        t_oracle = time.monotonic() - t1
-        timings.append((t_spark + t_oracle, t_spark, t_oracle, name))
-        msgs = compare_result(scols, srows, ocols, orows)
-        if not msgs:
-            print(f"✓ {name} ({len(srows)} rows)")
+        timings.append((res.spark_s + res.oracle_s, res.spark_s, res.oracle_s, name))
+        if not res.msgs:
+            print(f"✓ {name} ({res.rows} rows)")
         else:
             failures += 1
-            print(f"✗ {name}: " + "; ".join(msgs))
+            print(f"✗ {name}: " + "; ".join(res.msgs))
         # block-manager hygiene between queries (see bench.py): drop SQL
         # cache, explicitly unpersist RDD-level checkpoint blocks (the
         # async ContextCleaner otherwise lets them pile up across the
         # 180+-query sweep), and release Python refs
-        sdf = None
         spark.catalog.clearCache()
         release_persistent_rdds(spark)
         gc.collect()

@@ -7,17 +7,25 @@ complete gate, runnable by anyone with ``pytest``: every ``queries()``
 entry is executed on Spark and compared — row count, column set,
 order-insensitive normalized values — against its ``oracle_sql()`` text on
 DuckDB over the same sf0.001 parquet tables, the same comparison the
-driver applies (see scripts/verify_queries.py for the sf0.01 sweep).
+driver applies (see scripts/verify_queries.py for the sf0.01 sweep). A
+query whose input is absent on this machine skips with the reason.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pytest
 
 import __spark_entry__ as entrymod
 
 pytestmark = pytest.mark.spark
-from readability_spark.testing import compare_result, register_oracle_views
+from readability_spark.testing import (
+    check_parity,
+    compare_result,
+    register_oracle_views,
+    skip_reason,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -25,8 +33,17 @@ _QUERIES = entrymod.queries()
 _ORACLES = entrymod.oracle_sql()
 
 
+def test_registry_names_are_unique():
+    counts = Counter(name for name, _, _ in entrymod._REGISTRY)
+    assert [n for n, c in counts.items() if c > 1] == []
+
+
 def test_every_query_has_an_oracle():
-    assert set(_QUERIES) == set(_ORACLES)
+    assert _QUERIES.keys() == _ORACLES.keys()
+
+
+def test_two_empty_results_are_a_mismatch():
+    assert compare_result(["url"], [], ["url"], [])
 
 
 @pytest.fixture(scope="module")
@@ -41,13 +58,8 @@ def oracle_con():
 
 @pytest.mark.parametrize("name", list(_QUERIES))
 def test_oracle_parity(name, spark, oracle_con):
-    sdf = _QUERIES[name](spark, SF_DIR)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    res = oracle_con.execute(_ORACLES[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-
-    msgs = compare_result(scols, srows, ocols, orows)
+    reason = skip_reason(name)
+    if reason:
+        pytest.skip(reason)
+    msgs = check_parity(spark, oracle_con, SF_DIR, _QUERIES[name], _ORACLES[name]).msgs
     assert not msgs, f"{name}: " + "; ".join(msgs)
