@@ -367,27 +367,55 @@ def _q_tokenfinder_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_token_paths(_pages(spark, sf_dir))
 
 
+_TOKENFINDER_CRAWL_GOLDENS = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "tests", "goldens_tokenfinder_crawl.json"
+)
+
+
+def _tokenfinder_crawl_pages() -> list:
+    """(url, html): 24 crawl-shaped pages (perfbench/crawlpages.py, seed 1,
+    imported read-only) and one page without an article."""
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+    try:
+        import crawlpages
+    finally:
+        sys.path.pop(0)
+    pages = [(p.url, p.html) for p in crawlpages.make_pages(1, 24)]
+    return pages + [("https://empty.example/page.html", b"<html><body></body></html>")]
+
+
 def _tokenfinder_real_corpus() -> list:
-    """(name, url, html) for the reference fixture pages whose elected path
-    matches the reference golden (sources/fixtures.py single source)."""
+    """(url, html, expected elected path) for the reference fixture pages
+    whose elected path matches the reference golden (sources/fixtures.py
+    single source). Without the reference checkout: the crawl pages above
+    against tests/goldens_tokenfinder_crawl.json, characterisation goldens
+    (what the in-process finder elected when they were written; regenerate
+    with scripts/tokenfinder_crawl_goldens.py only for an intended change)."""
     from readability_spark.sources import fixtures
 
     have = set(fixtures.fixture_names())
-    return [
-        (n, f"http://fakehost/test/{n}/page.html", fixtures.load_case(n)["source"])
-        for n in fixtures.TOKENFINDER_MATCHED_PAGES
-        if n in have
-    ]
+    if have:
+        gold = fixtures.tokenfinder_path_goldens()
+        return [
+            (f"http://fakehost/test/{n}/page.html", fixtures.load_case(n)["source"], gold[n][1])
+            for n in fixtures.TOKENFINDER_MATCHED_PAGES
+            if n in have
+        ]
+    with open(_TOKENFINDER_CRAWL_GOLDENS) as f:
+        gold = json.load(f)
+    return [(url, html, gold[url]) for url, html in _tokenfinder_crawl_pages()]
 
 
 def _q_tokenfinder_real_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The token-density elector probed on REAL reference pages (messy crawl
     HTML), not the synthetic template — the oracle is the reference's own
     elected-path goldens (test/SampleTests.cs DataRows), so this row checks
-    finder parity end to end through the Spark mapInPandas surface."""
+    finder parity end to end through the Spark mapInPandas surface. Without
+    the reference checkout the pages and goldens are the crawl-shaped
+    fallback of ``_tokenfinder_real_corpus``."""
     from readability_spark.operators.extract import extract_token_paths
 
-    rows = [(url, html) for _n, url, html in _tokenfinder_real_corpus()]
+    rows = [(url, html) for url, html, _path in _tokenfinder_real_corpus()]
     df = spark.createDataFrame(rows, "url string, html binary")
     # no-article pages golden as '' in SampleTests.cs — align null with it
     return extract_token_paths(df).select(
@@ -396,12 +424,9 @@ def _q_tokenfinder_real_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tokenfinder_real_oracle() -> str:
-    from readability_spark.sources import fixtures
-
-    gold = fixtures.tokenfinder_path_goldens()
     vals = ",\n".join(
-        "('{}', '{}')".format(url, gold[n][1].replace("'", "''"))
-        for n, url, _html in _tokenfinder_real_corpus()
+        "('{}', '{}')".format(url, path.replace("'", "''"))
+        for url, _html, path in _tokenfinder_real_corpus()
     )
     if not vals:
         return "SELECT ''::varchar AS url, ''::varchar AS top_path WHERE 1=0"

@@ -92,17 +92,3 @@ def check_parity(spark, con, sf_dir: str, builder, sql: str) -> Parity:
     t2 = time.monotonic()
     return Parity(len(srows), compare_result(scols, srows, ocols, orows), t1 - t0, t2 - t1)
 
-
-def skip_reason(name: str) -> str | None:
-    """Why query ``name`` cannot be checked on this machine, or None.
-
-    ``tokenfinder_real_paths`` runs over the reference checkout's pages;
-    without them both sides are empty and the check would compare nothing.
-    """
-    if name != "tokenfinder_real_paths":
-        return None
-    import __spark_entry__ as entrymod
-
-    if entrymod._tokenfinder_real_corpus():
-        return None
-    return "no reference pages: the real-page token-finder corpus is empty"

@@ -15,7 +15,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from readability_spark.plans.pipeline import release_persistent_rdds
-from readability_spark.testing import check_parity, register_oracle_views, skip_reason
+from readability_spark.testing import check_parity, register_oracle_views
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "0.01"
 # names may be space- or comma-separated; a bare "--only" flag is tolerated
@@ -52,10 +52,6 @@ def main():
     timings: list = []
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
-            continue
-        reason = skip_reason(name)
-        if reason:
-            print(f"- {name}: skipped ({reason})")
             continue
         try:
             res = check_parity(spark, con, SF_DIR, fn, oracles[name])

@@ -34,7 +34,6 @@ _REFERENCE_GATES = {
     "test_fixtures_corpus.py": "fixture corpus",
     "test_sample_pages.py": "SamplePages",
     "test_tokenfinder_parity.py": "token-finder parity",
-    "test_oracle_parity.py": "oracle parity",
     "test_spark_pipeline.py": "job-path Spark",
     "test_iceberg.py": "Iceberg",
 }

@@ -7,8 +7,7 @@ complete gate, runnable by anyone with ``pytest``: every ``queries()``
 entry is executed on Spark and compared — row count, column set,
 order-insensitive normalized values — against its ``oracle_sql()`` text on
 DuckDB over the same sf0.001 parquet tables, the same comparison the
-driver applies (see scripts/verify_queries.py for the sf0.01 sweep). A
-query whose input is absent on this machine skips with the reason.
+driver applies (see scripts/verify_queries.py for the sf0.01 sweep).
 """
 
 from __future__ import annotations
@@ -20,12 +19,7 @@ import pytest
 import __spark_entry__ as entrymod
 
 pytestmark = pytest.mark.spark
-from readability_spark.testing import (
-    check_parity,
-    compare_result,
-    register_oracle_views,
-    skip_reason,
-)
+from readability_spark.testing import check_parity, compare_result, register_oracle_views
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -58,8 +52,5 @@ def oracle_con():
 
 @pytest.mark.parametrize("name", list(_QUERIES))
 def test_oracle_parity(name, spark, oracle_con):
-    reason = skip_reason(name)
-    if reason:
-        pytest.skip(reason)
     msgs = check_parity(spark, oracle_con, SF_DIR, _QUERIES[name], _ORACLES[name]).msgs
     assert not msgs, f"{name}: " + "; ".join(msgs)
