@@ -2652,11 +2652,10 @@ def _q_pagination_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_cc_large_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components by alternating large-star/small-star rounds
     (Kiveris et al.) over the SAME verified minhash pair graph as
-    `dedup_clusters` — the independently-derived second clustering
-    algorithm; the oracle is the same recursive-CTE transitive closure,
-    so the driver check cross-validates both implementations against
-    ground truth (and tests/test_links.py pins them equal to each other
-    and to union-find)."""
+    `dedup_clusters`: the bare (doc_id, cluster_id) labels that
+    `dedup_clusters` extends with cluster sizes, checked against the
+    recursive-CTE transitive closure (tests/test_links.py pins it to
+    brute force on adversarial shapes)."""
     from readability_spark.operators.dedup import (
         minhash_lsh_pairs,
         with_injected_duplicates,
@@ -3561,24 +3560,34 @@ SELECT id_a, id_b, jaccard FROM pairs
 """
 
 
-def _clusters_oracle() -> str:
-    """Mirror of dedup.near_dup_clusters: transitive closure over the
-    verified minhash pair graph (recursive CTE — reachability, then min
-    reachable id as the cluster label; the Spark side computes the same
-    labeling with log-round label propagation)."""
-    return f"""
-WITH RECURSIVE {_minhash_pairs_ctes()},
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
+def _closure_ctes(src: str) -> str:
+    """The cluster oracles' shared reference labeling over the pair table
+    ``src`` (id_a, id_b): ``edges`` (both orientations), ``walk``
+    (recursive transitive closure: a row (v, n) for every node n reachable
+    from v) and ``lbl`` (doc_id, cluster_id = min reachable id; a node
+    reaches itself through any neighbor, so the min includes self). The
+    caller's WITH must be RECURSIVE."""
+    return f"""edges AS (
+  SELECT id_a AS src, id_b AS dst FROM {src}
   UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
+  SELECT id_b AS src, id_a AS dst FROM {src}
 ),
 walk(v, n) AS (
   SELECT src, dst FROM edges
   UNION
   SELECT w.v, e.dst FROM walk w JOIN edges e ON e.src = w.n
 ),
-lbl AS (SELECT v AS doc_id, min(n) AS cluster_id FROM walk GROUP BY v),
+lbl AS (SELECT v AS doc_id, min(n) AS cluster_id FROM walk GROUP BY v)"""
+
+
+def _clusters_oracle() -> str:
+    """Mirror of dedup.near_dup_clusters: transitive closure over the
+    verified minhash pair graph (recursive CTE — reachability, then min
+    reachable id as the cluster label; the Spark side computes the same
+    labeling with log-round large/small-star components)."""
+    return f"""
+WITH RECURSIVE {_minhash_pairs_ctes()},
+{_closure_ctes('pairs')},
 sz AS (SELECT cluster_id, count(*) AS cluster_size FROM lbl GROUP BY 1)
 SELECT l.doc_id, l.cluster_id, sz.cluster_size::int AS cluster_size
 FROM lbl l JOIN sz USING (cluster_id)
@@ -3608,17 +3617,7 @@ def _soft_weights_oracle(alpha: float = 0.5) -> str:
     1.0 for docs with no verified near-duplicate."""
     return f"""
 WITH RECURSIVE {_minhash_pairs_ctes()},
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-walk(v, n) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT w.v, e.dst FROM walk w JOIN edges e ON e.src = w.n
-),
-lbl AS (SELECT v AS doc_id, min(n) AS cluster_id FROM walk GROUP BY v),
+{_closure_ctes('pairs')},
 sz AS (SELECT cluster_id, count(*) AS cluster_size FROM lbl GROUP BY 1),
 mem AS (SELECT l.doc_id, sz.cluster_size FROM lbl l JOIN sz USING (cluster_id))
 SELECT d.doc_id,
@@ -3739,17 +3738,7 @@ def _split_oracle(splits=None) -> str:
     ) + f" ELSE '{splits[-1][0]}' END"
     return f"""
 WITH RECURSIVE {_minhash_pairs_ctes()},
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-walk(v, n) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT w.v, e.dst FROM walk w JOIN edges e ON e.src = w.n
-),
-lbl AS (SELECT v AS doc_id, min(n) AS cluster_id FROM walk GROUP BY v),
+{_closure_ctes('pairs')},
 asg AS (
   SELECT d.doc_id, l.cluster_id, {u} AS u
   FROM dup d LEFT JOIN lbl l USING (doc_id)),
@@ -5455,17 +5444,8 @@ def _cc_large_star_oracle() -> str:
     only — cc_large_small_star must reproduce it exactly."""
     return f"""
 WITH RECURSIVE {_minhash_pairs_ctes()},
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-walk(v, n) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT w.v, e.dst FROM walk w JOIN edges e ON e.src = w.n
-)
-SELECT v AS doc_id, least(min(n), v) AS cluster_id FROM walk GROUP BY v
+{_closure_ctes('pairs')}
+SELECT doc_id, cluster_id FROM lbl
 """
 
 
@@ -6460,23 +6440,11 @@ FROM ranked WHERE rn = 1
 
 def _image_dup_clusters_oracle() -> str:
     """Mirror of pair_graph_clusters over the image pair graph: the image
-    near-dup oracle as a nested CTE, then the same recursive transitive
-    closure + min-reachable-id labeling as _clusters_oracle (a node
-    reaches itself through any neighbor since edges carry both
-    directions, so the label min includes self)."""
+    near-dup oracle as a nested CTE, then the same _closure_ctes labeling
+    as _clusters_oracle."""
     return f"""
 WITH RECURSIVE ip AS ({_image_near_dup_oracle()}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM ip
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM ip
-),
-walk(v, n) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT w.v, e.dst FROM walk w JOIN edges e ON e.src = w.n
-),
-lbl AS (SELECT v AS doc_id, min(n) AS cluster_id FROM walk GROUP BY v),
+{_closure_ctes('ip')},
 sz AS (SELECT cluster_id, count(*) AS cluster_size FROM lbl GROUP BY 1)
 SELECT l.doc_id, l.cluster_id, sz.cluster_size::int AS cluster_size
 FROM lbl l JOIN sz USING (cluster_id)
@@ -6489,17 +6457,7 @@ def _audio_dup_clusters_oracle() -> str:
     oracle nested."""
     return f"""
 WITH RECURSIVE ap AS ({_audio_near_dup_oracle()}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM ap
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM ap
-),
-walk(v, n) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT w.v, e.dst FROM walk w JOIN edges e ON e.src = w.n
-),
-lbl AS (SELECT v AS doc_id, min(n) AS cluster_id FROM walk GROUP BY v),
+{_closure_ctes('ap')},
 sz AS (SELECT cluster_id, count(*) AS cluster_size FROM lbl GROUP BY 1)
 SELECT l.doc_id, l.cluster_id, sz.cluster_size::int AS cluster_size
 FROM lbl l JOIN sz USING (cluster_id)
@@ -7154,17 +7112,7 @@ def _keep_best_oracle() -> str:
     )
     return f"""
 WITH RECURSIVE {_minhash_pairs_ctes()},
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-walk(v, n) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT w.v, e.dst FROM walk w JOIN edges e ON e.src = w.n
-),
-lbl AS (SELECT v AS doc_id, min(n) AS cluster_id FROM walk GROUP BY v),
+{_closure_ctes('pairs')},
 sz AS (SELECT cluster_id, count(*) AS cluster_size FROM lbl GROUP BY 1),
 q AS (SELECT doc_id, {q} AS quality FROM dup),
 m AS (

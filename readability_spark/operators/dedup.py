@@ -259,7 +259,7 @@ def incremental_minhash_new(
 
 
 # ---------------------------------------------------------------------------
-# 3. SimHash (32-bit, portable nibble arithmetic) + byte-banding near-dup
+# 3. SimHash (32-bit, portable nibble arithmetic)
 # ---------------------------------------------------------------------------
 
 def _hash32_expr(token_col: str, locate_fn: str = "instr", offset: int = 0) -> str:
@@ -293,86 +293,30 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     return agg.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """DEMO ONLY — not a production path and not exposed in `queries()`.
-
-    Near-dup pairs: band the 32-bit simhash into 4 bytes; pairs sharing
-    any byte are candidates (pigeonhole: hamming<=3 ⇒ one byte equal);
-    verify by popcount of xor. The 8-bit band keys cap at 256 buckets per
-    band, so the banded self-join goes quadratic past ~10^8 docs; use
-    `simhash64_near_pairs` (4×16-bit bands, 65,536 buckets) at scale."""
-    sh = simhash(docs)
-    bands = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        ((F.col("simhash") / F.lit(2 ** (8 * i))).cast("long") % 256).alias(
-                            "key"
-                        ),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    ham = F.expr("bit_count(sh_a ^ sh_b)")
-    return (
-        cands.withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
 # ---------------------------------------------------------------------------
 # 3b. SimHash64 (two portable 32-bit halves) + 4×16-bit banding — prod path
 # ---------------------------------------------------------------------------
 
-def simhash64(docs: DataFrame, use_xxhash64: bool = False) -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """Per-doc 64-bit simhash as two 32-bit halves (sim_hi, sim_lo).
 
-    The 32-bit variant's 8-bit band keys cap out at 256 buckets per band —
-    quadratic candidate joins at 10^9+ docs (VERDICT r1). 64 bits with
+    A 32-bit simhash banded into 8-bit keys caps out at 256 buckets per
+    band — quadratic candidate joins at 10^9+ docs (VERDICT r1). 64 bits with
     4×16-bit bands gives 65,536 buckets per band, and the wider hash stops
     false bit-collisions dominating the vote sums at corpus scale.
 
     Token hash = first 16 hex chars of md5 (hi: chars 1-8, lo: 9-16) — the
     same nibble arithmetic runs in DuckDB, so the full pipeline keeps an
-    exact SQL oracle. ``use_xxhash64=True`` swaps in Spark's JVM-native
-    ``xxhash64`` split into two halves — cheaper per token, for prod jobs
-    that don't need cross-engine oracle parity.
+    exact SQL oracle.
     """
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-    if use_xxhash64:
-        # xxhash64 is signed; take the low 32 bits of each half via
-        # floor-division against 2^32 after shifting into non-negative space
-        h64 = F.xxhash64("tok")
-        toks = toks.withColumn("h_hi", F.shiftrightunsigned(h64, 32)).withColumn(
-            "h_lo", h64.bitwiseAND(F.lit(0xFFFFFFFF))
-        )
-    else:
-        # conv(hex, 16, 10) == the oracle's nibble arithmetic (verified
-        # value-identical) at 1/8 the expression work per token
-        toks = toks.withColumn(
-            "h_hi", F.expr("cast(conv(substr(md5(tok), 1, 8), 16, 10) as bigint)")
-        ).withColumn(
-            "h_lo", F.expr("cast(conv(substr(md5(tok), 9, 8), 16, 10) as bigint)")
-        )
+    # conv(hex, 16, 10) == the oracle's nibble arithmetic (verified
+    # value-identical) at 1/8 the expression work per token
+    toks = toks.withColumn(
+        "h_hi", F.expr("cast(conv(substr(md5(tok), 1, 8), 16, 10) as bigint)")
+    ).withColumn(
+        "h_lo", F.expr("cast(conv(substr(md5(tok), 9, 8), 16, 10) as bigint)")
+    )
     votes = [
         F.sum(
             F.when(((F.col("h_hi") / F.lit(2**i)).cast("long") % 2) == 1, 1).otherwise(-1)
@@ -399,7 +343,6 @@ def simhash64(docs: DataFrame, use_xxhash64: bool = False) -> DataFrame:
 def simhash64_near_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
-    use_xxhash64: bool = False,
     bucket_cap: int = 64,
     _stages: "dict | None" = None,
 ) -> DataFrame:
@@ -433,7 +376,7 @@ def simhash64_near_pairs(
     two joins instead of one, both on bounded buckets.
     """
     return hash64_near_pairs(
-        simhash64(docs, use_xxhash64=use_xxhash64),
+        simhash64(docs),
         max_hamming=max_hamming,
         bucket_cap=bucket_cap,
         _stages=_stages,
@@ -713,108 +656,21 @@ def joint_near_dup(text_pairs: DataFrame, media_pairs: DataFrame) -> DataFrame:
 # 3c. Connected components over the near-dup pair graph → dedup clusters
 # ---------------------------------------------------------------------------
 
-def connected_components(
-    pairs: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 25
-) -> DataFrame:
-    """Label every node of the pair graph with its component's minimum id:
-    (doc_id, cluster_id) — delegates to the alternating large-star /
-    small-star algorithm (graph.cc_large_small_star, Kiveris et al.
-    SoCC'14), which converged 5x faster than the min-label pointer-jump
-    variant below on the long-chain aHash pair graph (4.3s vs 24.4s at
-    sf0.1, 21 pointer-jump rounds vs 7 star rounds: a single jump per
-    round contracts chains at Fibonacci rate, not true doubling). Both
-    implementations remain and are cross-checked equal in
-    tests/test_links.py."""
-    from readability_spark.operators.graph import cc_large_small_star
-
-    return cc_large_small_star(pairs, src=src, dst=dst, max_iter=max_iter)
-
-
-def connected_components_pointer_jump(
-    pairs: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 25
-) -> DataFrame:
-    """Label every node of the pair graph with its component's minimum id:
-    (doc_id, cluster_id). This is the step that turns near-dup PAIRS into
-    dedup CLUSTERS — "keep one doc per cluster" is wrong if done per-pair
-    (a~b, b~c must collapse to ONE survivor, not two).
-
-    Algorithm: iterative min-label propagation with pointer jumping. Each
-    round a node takes the min label over {itself} ∪ {neighbors' labels}
-    ∪ {its current label's label} — the last term (pointer jump) doubles
-    label-chain hops per round, so convergence is O(log n) rounds even on
-    path-shaped graphs (same asymptotics as large-star/small-star, Kiveris
-    et al., MapReduce CC). Near-dup clusters from LSH banding are near-
-    cliques, so 2-3 rounds are typical.
-
-    Scale shape: every round is two long-key hash joins + one map-side-
-    combined min aggregation; all shuffled rows are (long, long).
-    `localCheckpoint` truncates lineage each round (no exponential plan).
-    The driver loop itself is O(log n) iterations with a single scalar
-    fixpoint probe per round — the same structure GraphX/GraphFrames use;
-    labels only ever decrease, so an unchanged sum(label) is a fixpoint
-    proof, not a heuristic.
-    """
-    # Both edge orientations from ONE scan of `pairs` (explode, not a
-    # two-branch union): the pair graph is usually the output of an
-    # expensive pipeline (LSH banding, media decode + hamming verify), and
-    # a self-union executes that pipeline twice when edges first
-    # materialize — measured 34.5s -> ~20s on the sf0.1 image aHash graph.
-    s = F.col(src).cast("long")
-    d = F.col(dst).cast("long")
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(s.alias("src"), d.alias("dst")),
-                    F.struct(d.alias("src"), s.alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("src").alias("v")).distinct().select("v", F.col("v").alias("lbl"))
-    ).localCheckpoint()
-    prev_sum = None
-    for _ in range(max_iter):
-        nbr = edges.join(labels.withColumnRenamed("v", "src"), "src").select(
-            F.col("dst").alias("v"), "lbl"
-        )
-        jump = (
-            labels.alias("l1")
-            .join(labels.alias("l2"), F.col("l1.lbl") == F.col("l2.v"))
-            .select(F.col("l1.v").alias("v"), F.col("l2.lbl").alias("lbl"))
-        )
-        # Lazy checkpoint + the fixpoint probe as its materializing action:
-        # ONE Spark job per round (an eager checkpoint followed by the sum
-        # probe ran the round's plan once and scanned it again — 2 jobs).
-        labels = (
-            labels.unionByName(nbr)
-            .unionByName(jump)
-            .groupBy("v")
-            .agg(F.min("lbl").alias("lbl"))
-        ).localCheckpoint(eager=False)
-        cur_sum = labels.agg(F.sum("lbl")).first()[0]
-        if prev_sum is not None and cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
-    return labels.select(F.col("v").alias("doc_id"), F.col("lbl").alias("cluster_id"))
-
-
 def pair_graph_clusters(pairs: DataFrame) -> DataFrame:
     """(doc_id, cluster_id, cluster_size) over ANY verified near-dup pair
     graph — the modality-agnostic clustering layer: the same
-    :func:`connected_components` + size rejoin serves the text minhash
-    graph (:func:`near_dup_clusters`), the image aHash graph, and the
-    audio fingerprint graph unchanged. ``cluster_id`` is the smallest
-    doc_id in the component — the canonical survivor. Cluster size rides
-    along via one map-side-combined count + broadcast-sized rejoin (the
-    cluster table is tiny relative to the corpus — only docs with
-    near-dups appear)."""
-    labels = connected_components(pairs)
+    :func:`~readability_spark.operators.graph.cc_large_small_star`
+    components + size rejoin serve the text minhash graph
+    (:func:`near_dup_clusters`), the image aHash graph, and the audio
+    fingerprint graph unchanged. This is the step that turns near-dup
+    PAIRS into dedup CLUSTERS: a~b and b~c collapse to ONE survivor, not
+    two. ``cluster_id`` is the smallest doc_id in the component — the
+    canonical survivor. Cluster size rides along via one map-side-combined
+    count + broadcast-sized rejoin (the cluster table is tiny relative to
+    the corpus — only docs with near-dups appear)."""
+    from readability_spark.operators.graph import cc_large_small_star
+
+    labels = cc_large_small_star(pairs)
     sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return labels.join(sizes, "cluster_id").select(
         "doc_id", "cluster_id", F.col("cluster_size").cast("int").alias("cluster_size")
@@ -847,7 +703,7 @@ def canonical_survivors(docs: DataFrame) -> DataFrame:
 
     # member feeds two consumers (the election aggregate and the final
     # rejoin); without a barrier the whole cluster pipeline (LSH pairs +
-    # pointer-jumping components) re-executes per consumer.
+    # large/small-star components) re-executes per consumer.
     member = near_dup_clusters(docs).join(
         quality_score(docs).select("doc_id", "quality"), "doc_id"
     ).localCheckpoint(eager=False)

@@ -340,12 +340,10 @@ def leakage_safe_split(docs: DataFrame, splits=DEFAULT_SPLITS) -> DataFrame:
 
     Output: (doc_id, split, is_clustered) for every input doc.
     """
-    from readability_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_pairs,
-    )
+    from readability_spark.operators.dedup import minhash_lsh_pairs
+    from readability_spark.operators.graph import cc_large_small_star
 
-    labels = connected_components(minhash_lsh_pairs(docs))
+    labels = cc_large_small_star(minhash_lsh_pairs(docs))
     return _split_assignment(docs, labels, splits).select(
         "doc_id", "split", "is_clustered"
     )
@@ -364,15 +362,13 @@ def split_leakage_audit(docs: DataFrame, splits=DEFAULT_SPLITS) -> DataFrame:
     against the slim (doc_id, split) projection; the final aggregate is
     K-splits-row tiny.
     """
-    from readability_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_pairs,
-    )
+    from readability_spark.operators.dedup import minhash_lsh_pairs
+    from readability_spark.operators.graph import cc_large_small_star
 
     # pairs feeds two consumers (components + the straddle join); the
     # assignment feeds three (per-split agg + both straddle endpoints).
     pairs = minhash_lsh_pairs(docs).localCheckpoint(eager=False)
-    labels = connected_components(pairs)
+    labels = cc_large_small_star(pairs)
     assignment = _split_assignment(docs, labels, splits).localCheckpoint(
         eager=False
     )

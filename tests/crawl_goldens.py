@@ -2,8 +2,9 @@
 
 The pages are generated, never stored: crawl-shaped pages from
 ``perfbench/crawlpages.py`` (seeds 1-3, imported read-only), six hostile
-page shapes at two sizes each, and seeded byte-level mutations of crawl
-pages. ``tests/goldens_crawl.json`` holds, per page, a sha256 of the input
+page shapes at two sizes each, one hand-written page per extraction
+feature class the crawl pages lack (``FEATURE_PAGES``), and seeded
+byte-level mutations of crawl pages. ``tests/goldens_crawl.json`` holds, per page, a sha256 of the input
 and of every ``ARTICLE_SCHEMA`` field the extraction call returns
 (``content_html`` included). The expected values are characterisation
 goldens: what the engine produced when they were written, a regression net
@@ -90,6 +91,54 @@ HOSTILE_SHAPES = {
     "li_runs": (li_runs, (500, 1000)),
 }
 
+def _feature_page(body: str, head: str = "") -> str:
+    return (
+        "<!DOCTYPE html><html><head><title>Feature page for the goldens</title>"
+        f"{head}</head><body>{body}</body></html>"
+    )
+
+
+_ARTICLE = "".join(f"<p>{_FILLER * 3}</p>" for _ in range(4))
+
+# feature class -> page; tests/test_goldens_crawl.py asserts what each one
+# must do besides matching its golden
+FEATURE_PAGES = {
+    # the article's dir attribute becomes the result's dir
+    "rtl": _feature_page(f'<div dir="rtl" class="content">{_ARTICLE}</div>'),
+    # relative link and image URLs resolve against <base href>, not the page URL
+    "base_href": _feature_page(
+        f'<div class="content">{_ARTICLE}<p>{_FILLER}See <a href="story/2.html">the '
+        'next story</a> and the photo <img src="img/photo.jpg" alt="harbour"> of '
+        "the bridge.</p></div>",
+        head='<base href="https://static.example.org/news/">',
+    ),
+    # nodes with the hidden attribute or aria-hidden="true" are dropped
+    "hidden": _feature_page(
+        f'<div class="content">{_ARTICLE}<p hidden>Hidden attribute marker text.</p>'
+        f'<div aria-hidden="true"><p>Aria hidden marker text, {_FILLER}</p></div></div>'
+    ),
+    # <font> is renamed to <span>, its text kept
+    "font": _feature_page(
+        '<div class="content">'
+        + "".join(
+            f'<p>{_FILLER}<font color="red">Font tag marker {k}.</font> {_FILLER}</p>'
+            for k in range(4)
+        )
+        + "</div>"
+    ),
+    # a text paragraph next to the top candidate is absorbed into the article
+    "sibling": _feature_page(
+        f'<div id="page"><div class="content">{_ARTICLE}</div><p>Sibling paragraph '
+        "marker: the harbour bridge opens next spring, the council said on "
+        "Tuesday.</p></div>"
+    ),
+}
+
+
+def feature_url(name: str) -> str:
+    return f"https://feature.example/{name}/index.html"
+
+
 _SNIPPETS = (
     "<div>", "</div>", "<p>", "</p>", "<br>", "<br/>", "<table>", "<tr><td>",
     "</td>", "<li>", "</ul>", '<a href="#x">', "</a>", "&amp;", "&#x41;",
@@ -149,6 +198,8 @@ def corpus() -> list:
             pages.append(
                 (f"hostile:{name}:{n}", f"https://hostile.example/{name}/{n}", build(n).encode())
             )
+    for name, html in FEATURE_PAGES.items():
+        pages.append((f"feature:{name}", feature_url(name), html.encode()))
     # mutations of the smaller crawl pages keep the gate's run time down
     small = [p for p in crawl if len(p.html) < 40_000]
     rng = random.Random("crawl_goldens:mutations")

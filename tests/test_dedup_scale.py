@@ -42,17 +42,6 @@ def test_simhash64_matches_injected_duplicates(spark, docs):
     assert len(pairs) < 10 * n
 
 
-def test_simhash64_xxhash_variant_finds_duplicates(spark, docs):
-    dense = with_injected_duplicates(docs, every=10)
-    pairs = simhash64_near_pairs(dense, use_xxhash64=True)
-    exact = {(r.id_a, r.id_b) for r in pairs.collect() if r.hamming == 0}
-    expected = {
-        (d.doc_id, d.doc_id + 1_000_000)
-        for d in docs.filter(F.col("doc_id") % 10 == 0).select("doc_id").collect()
-    }
-    assert expected <= exact
-
-
 def test_simhash64_band_buckets_stay_small(spark, docs):
     """The 16-bit band keys must spread the corpus: no bucket may hold a
     macroscopic fraction of docs (the 8-bit variant's failure mode)."""
@@ -110,13 +99,13 @@ def test_exact_duplicates_id_list_capped(spark):
 def test_connected_components_path_graph(spark):
     """A 64-node path (worst case for plain min-propagation: diameter 63)
     must converge to one component within the log-round budget — the
-    pointer jump is what makes that happen."""
-    from readability_spark.operators.dedup import connected_components
+    star steps contract chains geometrically."""
+    from readability_spark.operators.graph import cc_large_small_star
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "id_a long, id_b long"
     )
-    out = connected_components(pairs).collect()
+    out = cc_large_small_star(pairs).collect()
     assert len(out) == 64
     assert {r.cluster_id for r in out} == {0}
 
@@ -124,7 +113,7 @@ def test_connected_components_path_graph(spark):
 def test_connected_components_multi_component(spark):
     """Two triangles + one pair + transitive chain a~b~c: labels are the
     component minima and never leak across components."""
-    from readability_spark.operators.dedup import connected_components
+    from readability_spark.operators.graph import cc_large_small_star
 
     edges = [
         (1, 2), (2, 3), (1, 3),          # triangle {1,2,3}
@@ -133,7 +122,7 @@ def test_connected_components_multi_component(spark):
         (30, 31), (31, 32),              # chain -> {30,31,32}
     ]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r.doc_id: r.cluster_id for r in connected_components(pairs).collect()}
+    got = {r.doc_id: r.cluster_id for r in cc_large_small_star(pairs).collect()}
     assert got == {
         1: 1, 2: 1, 3: 1,
         10: 10, 11: 10, 12: 10,

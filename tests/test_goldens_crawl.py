@@ -50,13 +50,40 @@ def test_crawl_goldens_byte_identical(goldens):
 
 def test_goldens_cover_every_shape(goldens):
     kinds = {pid.split(":")[0] for pid in goldens["pages"]}
-    assert kinds == {"crawl", "hostile", "mutated"}
+    assert kinds == {"crawl", "feature", "hostile", "mutated"}
     assert {pid.split(":")[1] for pid in goldens["pages"] if pid.startswith("hostile:")} == set(
         G.HOSTILE_SHAPES
     )
+    assert {pid.split(":")[1] for pid in goldens["pages"] if pid.startswith("feature:")} == {
+        "rtl", "base_href", "hidden", "font", "sibling"
+    } == set(G.FEATURE_PAGES)
     ok = goldens["fields"].index("ok")
     outcomes = {row[ok] for row in goldens["pages"].values()}
     assert G.digest(True) in outcomes and G.digest(False) in outcomes
+
+
+# what each feature page must do, beyond matching its golden
+FEATURE_CHECKS = {
+    "rtl": lambda row: row["dir"] == "rtl",
+    "base_href": lambda row: 'href="https://static.example.org/news/story/2.html"'
+    in row["content_html"]
+    and 'src="https://static.example.org/news/img/photo.jpg"' in row["content_html"],
+    "hidden": lambda row: "marker" not in row["text"],
+    "font": lambda row: "<font" not in row["content_html"]
+    and "Font tag marker 3." in row["text"],
+    # absorbed as a sibling of the top candidate, not by promoting the parent
+    "sibling": lambda row: "Sibling paragraph marker" in row["text"]
+    and 'id="page"' not in row["content_html"],
+}
+
+
+@pytest.mark.parametrize("name", sorted(FEATURE_CHECKS))
+def test_feature_page_behaviour(name):
+    from readability_spark.operators.extract import _extract_one
+
+    row = _extract_one(G.feature_url(name), G.FEATURE_PAGES[name].encode(), {}, True)
+    assert row["ok"], row["err"]
+    assert FEATURE_CHECKS[name](row), {k: row[k] for k in ("dir", "content_html")}
 
 
 @pytest.mark.spark

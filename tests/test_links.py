@@ -348,16 +348,12 @@ def _components_bruteforce(pairs):
         [(9, 5), (5, 9), (9, 5)],                               # dups/reversed
     ],
 )
-def test_cc_large_small_star_matches_bruteforce_and_pointer_jumping(spark, pairs):
-    from readability_spark.operators.dedup import connected_components_pointer_jump
+def test_cc_large_small_star_matches_bruteforce(spark, pairs):
     from readability_spark.operators.graph import cc_large_small_star
 
-    want = _components_bruteforce(pairs)
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
     star = {r.doc_id: r.cluster_id for r in cc_large_small_star(df).collect()}
-    pj = {r.doc_id: r.cluster_id for r in connected_components_pointer_jump(df).collect()}
-    assert star == want
-    assert pj == want
+    assert star == _components_bruteforce(pairs)
 
 
 def test_sample_neighbors_deterministic_and_bounded(spark):
@@ -389,9 +385,10 @@ def test_cc_star_converges_in_logarithmic_rounds(spark):
     """Convergence regression pin: on a 1,024-node path graph (the
     adversarial shape — near-clique LSH graphs converge faster) the
     large/small-star loop must finish in O(log n) fixpoint rounds
-    (measured: 11 = log2(n) + fixpoint confirmation). The pointer-jump
-    variant needed 21 rounds on a long-chain graph (Fibonacci-rate
-    contraction), which is exactly the regression this guards against."""
+    (measured: 11 = log2(n) + fixpoint confirmation). A min-label
+    pointer-jump loop needed 21 rounds on a long-chain graph
+    (Fibonacci-rate contraction), which is exactly the regression this
+    guards against."""
     from readability_spark.operators.graph import cc_large_small_star
 
     n = 1024
